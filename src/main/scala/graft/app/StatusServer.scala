@@ -73,11 +73,10 @@ class StatusServer(port: Int, warnings: Seq[String],
         respond(ex, 200, CdcPipeline.statusJson))
     server.createContext("/config",
       (ex: com.sun.net.httpserver.HttpExchange) => {
-        def q(s: String) = "\"" + s.replace("\\", "\\\\")
-          .replace("\"", "\\\"") + "\""
+        def arr(xs: Seq[String]) =
+          xs.map(CdcPipeline.jsonStr).mkString("[", ",", "]")
         respond(ex, 200,
-          s"""{"warnings":${warnings.map(q).mkString("[", ",", "]")},""" +
-            s""""readers":${consumers.map(q).mkString("[", ",", "]")}}""")
+          s"""{"warnings":${arr(warnings)},"readers":${arr(consumers)}}""")
       })
     server.createContext("/stop",
       (ex: com.sun.net.httpserver.HttpExchange) => {

@@ -172,7 +172,8 @@ object Ext18Queries {
     */
   def bandSql(spark: SparkSession, dir: String): DataFrame = {
     graft.Tables.registerAll(spark, dir)
-    graft.plans.BandJoinStrategy.setup(spark)
+    org.apache.spark.sql.graftbridge.PlanBridge.install(spark,
+      graft.plans.BandJoinStrategy)
     spark.conf.set(graft.plans.BandJoinStrategy.SqlFlag, "true")
     spark.sql(
       """WITH ev AS (

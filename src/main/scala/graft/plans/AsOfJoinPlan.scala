@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -98,13 +98,6 @@ object AsOfJoinStrategy extends SparkStrategy {
         n.leftKeyAttrs, n.rightKeyAttrs, n.leftTimeAttr,
         n.rightTimeAttr, n.payloadAttrs) :: Nil
     case _ => Nil
-  }
-
-  /** Idempotently install on an already-built session. */
-  def setup(spark: SparkSession): Unit = {
-    val exp = PlanBridge.experimental(spark)
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = AsOfJoinStrategy +: exp.extraStrategies
   }
 }
 
@@ -242,7 +235,7 @@ object PlannedAsOf {
       leftTime: String, rightTime: String,
       payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    AsOfJoinStrategy.setup(spark)
+    PlanBridge.install(spark, AsOfJoinStrategy)
     val lPlan = PlanBridge.analyzed(left)
     val rPlan = PlanBridge.analyzed(right)
     def attr(p: LogicalPlan, n: String): Attribute = {

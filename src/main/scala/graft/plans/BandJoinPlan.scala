@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Ascending, Attribute, AttributeSet, EqualTo, Expression, GreaterThanOrEqual, JoinedRow, LessThanOrEqual, Literal, RowOrdering, SortOrder, Subtract, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -120,12 +120,6 @@ object BandJoinStrategy extends SparkStrategy {
     * doc), which is the production posture.
     */
   val SqlFlag = "spark.graft.sql.bandjoin"
-
-  def setup(spark: SparkSession): Unit = {
-    val exp = PlanBridge.experimental(spark)
-    if (!exp.extraStrategies.contains(BandJoinStrategy))
-      exp.extraStrategies = BandJoinStrategy +: exp.extraStrategies
-  }
 }
 
 /** Co-partitioned sort-merge band join. Single forward pass per
@@ -460,7 +454,7 @@ object PlannedBandJoin {
     require(before >= 0 && after >= 0,
       s"band bounds must be >= 0, got before=$before after=$after")
     val spark = left.sparkSession
-    BandJoinStrategy.setup(spark)
+    PlanBridge.install(spark, BandJoinStrategy)
     val lPlan = PlanBridge.analyzed(left)
     val rPlan = PlanBridge.analyzed(right)
     def attr(p: LogicalPlan, n: String): Attribute = {

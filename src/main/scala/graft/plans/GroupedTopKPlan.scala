@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -78,13 +78,6 @@ object GroupedTopKStrategy extends SparkStrategy {
       GroupedTopKExec(planLater(n.child), n.keyAttrs, n.scoreAttr,
         n.tiebreakAttrs, n.k, n.rankAttr) :: Nil
     case _ => Nil
-  }
-
-  /** Idempotently install on an already-built session. */
-  def setup(spark: SparkSession): Unit = {
-    val exp = PlanBridge.experimental(spark)
-    if (!exp.extraStrategies.contains(GroupedTopKStrategy))
-      exp.extraStrategies = GroupedTopKStrategy +: exp.extraStrategies
   }
 }
 
@@ -186,7 +179,7 @@ object PlannedTopK {
   def topKPerKey(df: DataFrame, keys: Seq[String], score: String,
       tiebreak: Seq[String], k: Int): DataFrame = {
     val spark = df.sparkSession
-    GroupedTopKStrategy.setup(spark)
+    PlanBridge.install(spark, GroupedTopKStrategy)
     val plan = PlanBridge.analyzed(df)
     def check(n: String): Unit = {
       val m = plan.output.count(_.name.equalsIgnoreCase(n))

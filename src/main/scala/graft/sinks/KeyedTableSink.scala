@@ -159,11 +159,14 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   private def bucketOf = pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  /** Whole-table swap (flat mode): new generation + manifest promote. */
-  private def swapIn(next: DataFrame): Unit = {
+  /** Whole-table swap (flat mode): new generation + manifest promote;
+    * `meta` entries ride along in the new manifest.
+    */
+  private def swapIn(next: DataFrame,
+      meta: Map[String, String] = Map.empty): Unit = {
     val gen = s"g-${uuid()}"
     next.write.mode("overwrite").parquet(new Path(root, gen).toString)
-    val m = Map("flat" -> gen)
+    val m = meta + ("flat" -> gen)
     writeManifest(m)
     gc(m)
   }
@@ -254,22 +257,19 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     val data = load().cache()
     data.count() // materialize before the promote drops old dirs
     val dst = new KeyedTableSink(spark, path, keys, schema, newBuckets)
-    if (newBuckets <= 0) dst.swapIn(data)
-    else dst.swapBuckets(Map.empty,
-      data.repartition(newBuckets, dst.bucketOf), 0 until newBuckets)
+    dst.replace(data)
     data.unpersist()
     dst
   }
 
-  /** Apply one LWW'd batch (typed rows + `op` column) with the given
-    * write action (CdcMsgParser.java:225-248 dispatch).
-    */
-  /** Full-table replace (flat mode only): for maintained projections
-    * whose next content is computed wholesale from the previous
-    * generation — e.g. the incremental aggregate view, whose output IS
-    * the complete new (small) aggregate table. Same crash-atomic
-    * manifest promote as `apply`; `next` may read the current
-    * generation (its files survive until the post-promote GC).
+  /** Full-table replace: for state computed wholesale — a snapshot
+    * load, a re-shard, or a maintained projection whose next content
+    * is computed from the previous generation (the incremental
+    * aggregate view, whose output IS the complete new aggregate
+    * table). A bucketed sink hash-partitions `next` and swaps every
+    * bucket. Same crash-atomic manifest promote as `apply`; `next`
+    * may read the current generation (its files survive until the
+    * post-promote GC).
     * `epoch` >= 0 is recorded in the manifest so a streaming replay of
     * the same foreachBatch epoch can detect the projection already
     * reflects this batch (`lastEpoch`) and skip — without it, a crash
@@ -277,15 +277,16 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * delta against the agg that already contains it (double count).
     */
   def replace(next: DataFrame, epoch: Long = -1L): Unit = {
-    require(numBuckets <= 0, "replace is whole-table (flat) mode only")
-    val gen = s"g-${uuid()}"
-    next.write.mode("overwrite").parquet(new Path(root, gen).toString)
-    val m0 = Map("flat" -> gen)
-    val m = if (epoch >= 0) m0 + (MetaEpoch -> epoch.toString) else m0
-    writeManifest(m)
-    gc(m)
+    val meta: Map[String, String] =
+      if (epoch >= 0) Map(MetaEpoch -> epoch.toString) else Map.empty
+    if (numBuckets <= 0) swapIn(next, meta)
+    else swapBuckets(meta, next.repartition(numBuckets, bucketOf),
+      0 until numBuckets)
   }
 
+  /** Apply one LWW'd batch (typed rows + `op` column) with the given
+    * write action (CdcMsgParser.java:225-248 dispatch).
+    */
   def apply(batch: DataFrame, action: String): Unit = {
     if (numBuckets <= 0) {
       val state = load().cache()

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the same contract is a Structured Streaming file source over JSON
   * lines — each line one envelope, file order = offset order — with
   * `maxFilesPerTrigger` standing in for the reader's 200 MB admission
-  * cap (CdcReader.java:43). A Kafka/Pulsar/etc. source drops in by
-  * swapping `readStream.text` for the topic source; everything
-  * downstream is unchanged.
+  * cap (CdcReader.java:43). A `topic://` changelog is read through
+  * [[TopicSourceProvider]] (the spark-sql-kafka row contract) and
+  * [[fromKafkaShaped]]; everything downstream is unchanged.
   */
 /** CLI: render events.parquet -> CDC changelog JSON lines.
   * Usage: runMain graft.sources.ChangelogGen <eventsParquet> <outDir> [numFiles]
@@ -75,9 +75,9 @@ object Changelog {
     * `seq` is the partition-local Kafka offset — per-key order holds
     * for key-partitioned producers exactly as with [[TopicBroker]]
     * (partition-affine routing, YqlWriter.java:117-120). The kafka
-    * connector jar is not present in this sandbox, so the adapter is
-    * exercised by a spec that feeds kafka-SHAPED columns from the
-    * in-JVM topic source through the full pipeline.
+    * connector is not a dependency of this build; every `topic://`
+    * pipeline runs this adapter over [[TopicSourceProvider]], whose
+    * rows have the same columns.
     */
   def fromKafkaShaped(df: DataFrame): DataFrame =
     df.select(col("value").cast("string").as("value"),
@@ -85,22 +85,22 @@ object Changelog {
 
   /** Open a [[TopicBroker]] topic as the same (value, seq) contract —
     * the reference's actual front door (async partitioned topic
-    * consumer, CdcReader.java:34-53). `seq` is the PARTITION-LOCAL
-    * offset: per-key order holds because producers route by key
-    * (partition-affine, YqlWriter.java:117-120), exactly the
-    * reference's ordering guarantee. `maxOffsetsPerTrigger` is the
+    * consumer, CdcReader.java:34-53): [[TopicSourceProvider]]
+    * subscribed to `topic`, through [[fromKafkaShaped]]. `seq` is the
+    * PARTITION-LOCAL offset: per-key order holds because producers
+    * route by key (partition-affine, YqlWriter.java:117-120), exactly
+    * the reference's ordering guarantee. `maxOffsetsPerTrigger` is the
     * 200 MB admission-cap analog (CdcReader.java:43).
     */
   def readTopicStream(spark: SparkSession, topic: String,
       maxOffsetsPerTrigger: Long = 0L,
       maxBytesPerTrigger: Long = 0L): DataFrame =
-    spark.readStream
+    fromKafkaShaped(spark.readStream
       .format("graft.sources.TopicSourceProvider")
-      .option("topic", topic)
+      .option("subscribe", topic)
       .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger.toString)
       .option("maxBytesPerTrigger", maxBytesPerTrigger.toString)
-      .load()
-      .select(col("value"), col("offset").as("seq"))
+      .load())
 
   /** Deterministically render the driver `events` table into CDC
     * envelope JSON lines (same mix as CdcQueries: erase / keys-only /

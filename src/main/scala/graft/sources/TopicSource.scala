@@ -8,14 +8,27 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 /** Topic-backed CDC source (SURVEY.md §2 O1, CdcReader.java:34-53):
   * a partitioned, ordered-within-partition log consumed as a
-  * Structured Streaming `MicroBatchStream` with Kafka-shaped rows
-  * `(value STRING, partition INT, offset LONG)` and per-partition
-  * offsets checkpointed by Spark — the deferred-commit contract
-  * (offsets advance only after the batch succeeds, O10).
+  * Structured Streaming `MicroBatchStream` whose rows carry exactly
+  * the spark-sql-kafka column contract
+  *
+  * {{{
+  * key BINARY, value BINARY, topic STRING, partition INT,
+  * offset LONG, timestamp TIMESTAMP, timestampType INT
+  * }}}
+  *
+  * with the topic named by the kafka option `subscribe`, and
+  * per-partition offsets checkpointed by Spark — the deferred-commit
+  * contract (offsets advance only after the batch succeeds, O10).
+  * [[Changelog.fromKafkaShaped]] maps these rows to the pipeline's
+  * (value, seq) contract, the same adapter a real `format("kafka")`
+  * stream goes through. `timestamp` is deterministic (epoch + offset
+  * micros, the stub has no broker clock) and `timestampType` is 0
+  * (CreateTime); the pipeline consumes neither.
   *
   * Admission control: `maxOffsetsPerTrigger` caps rows per micro-batch
   * via `SupportsAdmissionControl`, and `maxBytesPerTrigger` caps the
@@ -34,9 +47,8 @@ object TopicBroker {
   final class Topic(val partitions: Int) {
     val logs: Array[scala.collection.mutable.ArrayBuffer[String]] =
       Array.fill(partitions)(scala.collection.mutable.ArrayBuffer())
-    // message keys, parallel to logs (null = unkeyed append). Only the
-    // kafka-shaped front door ([[KafkaShapedSourceProvider]]) reads
-    // them; the (value, partition, offset) contract ignores them.
+    // message keys, parallel to logs (null = unkeyed append); the
+    // source's `key` column
     val keys: Array[scala.collection.mutable.ArrayBuffer[String]] =
       Array.fill(partitions)(scala.collection.mutable.ArrayBuffer())
     // byte prefix sums per partition: bytesCum(p)(i) = total UTF-8
@@ -103,13 +115,7 @@ object TopicBroker {
   def endOffsets(name: String): Array[Long] =
     topic(name).logs.map(l => l.synchronized(l.length.toLong))
 
-  def read(name: String, partition: Int, from: Long,
-      until: Long): Seq[String] = {
-    val l = topic(name).logs(partition)
-    l.synchronized(l.slice(from.toInt, until.toInt).toSeq)
-  }
-
-  /** (key, value) slice — the kafka-shaped reader's view. */
+  /** (key, value) slice — what the source's partition reader emits. */
   def readKeyed(name: String, partition: Int, from: Long,
       until: Long): Seq[(String, String)] = {
     val t = topic(name)
@@ -122,9 +128,13 @@ object TopicBroker {
 
 object TopicSource {
   val schema: StructType = StructType(Seq(
-    StructField("value", StringType),
+    StructField("key", BinaryType),
+    StructField("value", BinaryType),
+    StructField("topic", StringType),
     StructField("partition", IntegerType),
-    StructField("offset", LongType)))
+    StructField("offset", LongType),
+    StructField("timestamp", TimestampType),
+    StructField("timestampType", IntegerType)))
 }
 
 /** `format("graft.sources.TopicSourceProvider")` entry point. */
@@ -144,8 +154,8 @@ class TopicTable extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = () => new Scan {
     private val topic = {
-      val t = options.get("topic")
-      require(t != null, "option 'topic' is required")
+      val t = options.get("subscribe")
+      require(t != null, "option 'subscribe' is required")
       t
     }
     private val maxOffsets =
@@ -267,15 +277,22 @@ class TopicMicroBatchStream(topic: String, maxOffsets: Long,
     (partition: InputPartition) => {
       val r = partition.asInstanceOf[TopicRange]
       new PartitionReader[InternalRow] {
-        private val rows =
-          TopicBroker.read(r.topic, r.partition, r.from, r.until).iterator
+        private val rows = TopicBroker
+          .readKeyed(r.topic, r.partition, r.from, r.until).iterator
+        private val topic = UTF8String.fromString(r.topic)
         private var off = r.from - 1
-        private var cur: String = _
+        private var cur: (String, String) = _
         override def next(): Boolean =
           if (rows.hasNext) { cur = rows.next(); off += 1; true }
           else false
-        override def get(): InternalRow =
-          InternalRow(UTF8String.fromString(cur), r.partition, off)
+        override def get(): InternalRow = InternalRow(
+          if (cur._1 == null) null else cur._1.getBytes(UTF_8),
+          cur._2.getBytes(UTF_8),
+          topic,
+          r.partition,
+          off,
+          off, // micros since epoch — deterministic stub CreateTime
+          0)
         override def close(): Unit = ()
       }
     }

@@ -120,17 +120,9 @@ object BootstrapTail {
 
   /** Phase 2: the changefeed tail from `cutoff` (exclusive). */
   def tail(spark: SparkSession, p: CdcPipeline.Pipeline,
-      cutoff: Long): StreamingQuery = {
-    val src =
-      if (p.changelogDir.startsWith("topic://"))
-        Changelog.readTopicStream(spark,
-          p.changelogDir.stripPrefix("topic://"),
-          maxOffsetsPerTrigger = p.maxFilesPerTrigger.toLong * 100)
-      else Changelog.readStream(spark, p.changelogDir,
-        p.maxFilesPerTrigger)
+      cutoff: Long): StreamingQuery =
     CdcPipeline.startWithSource(spark, p,
-      src.filter(col("seq") > cutoff))
-  }
+      CdcPipeline.source(spark, p).filter(col("seq") > cutoff))
 
   /** The whole protocol, restartable: bootstrap unless a cutoff is
     * already recorded, then attach the tail at it.

@@ -179,6 +179,9 @@ object CdcPipeline {
       s.conf.set("spark.sql.shuffle.partitions", p.threadsCount)
       s -> prev
     } else Nil
+    // every sink write runs under the pipeline's timeout and retry policy
+    def guarded(write: => Unit): Unit =
+      withRetry(p, st) { withTimeout(spark, p)(write) }
     try {
       p.updateSql match {
         case None =>
@@ -202,6 +205,16 @@ object CdcPipeline {
           val transformed = session.sql(sql)
             .withColumn("op", lit(CdcParse.OpUpdate))
           val eraseRows = lww.filter(col("op") === CdcParse.OpErase)
+          // erase rows in the transform's shape: `keep` columns pass
+          // through, the rest become typed nulls
+          def erasePadded(df: DataFrame, keep: String => Boolean) =
+            df.select(transformed.columns.map(c =>
+              if (keep(c)) col(c)
+              else lit(null).cast(
+                p.schema.columns.find(_.name == c)
+                  .map(_.dataType.catalogString).getOrElse("string"))
+                .as(c)).toIndexedSeq: _*)
+              .withColumn("op", lit(CdcParse.OpErase))
           val erases = p.deleteSql match {
             case Some(delSql) =>
               // reference semantics: erase ops flow through their OWN
@@ -210,22 +223,11 @@ object CdcPipeline {
               // target keys
               eraseRows.createOrReplaceTempView("rows")
               val delKeys = session.sql(delSql)
-              delKeys.select(transformed.columns.map(c =>
-                if (delKeys.columns.contains(c)) col(c)
-                else lit(null).cast(
-                  p.schema.columns.find(_.name == c)
-                    .map(_.dataType.catalogString).getOrElse("string"))
-                  .as(c)).toIndexedSeq: _*)
-                .withColumn("op", lit(CdcParse.OpErase))
+              erasePadded(delKeys, delKeys.columns.contains)
             case None =>
               // no delete query: erase keys pass through by name
-              eraseRows.select(transformed.columns.map(c =>
-                if (p.schema.pk.contains(c) || c == "op") col(c)
-                else lit(null).cast(
-                  p.schema.columns.find(_.name == c)
-                    .map(_.dataType.catalogString).getOrElse("string"))
-                  .as(c)).toIndexedSeq: _*)
-                .withColumn("op", lit(CdcParse.OpErase))
+              erasePadded(eraseRows,
+                c => p.schema.pk.contains(c) || c == "op")
           }
           // ONE bookkeeping job on the cached LWW batch: row count for
           // status + erase count to route the delete action (replaces
@@ -260,11 +262,9 @@ object CdcPipeline {
                 else prevState.groupBy(col(av.groupCol))
                   .agg(count(lit(1)).as("n"),
                     sum(col(av.valueCol)).cast("long").as("sum_v"))
-              withRetry(p, st) { withTimeout(spark, p) {
-                av.sink.replace(KeyedMerge.applyAggDelta(agg0,
-                  prevState, applied, p.sink.keys, av.groupCol,
-                  av.valueCol), batchId)
-              } }
+              guarded(av.sink.replace(KeyedMerge.applyAggDelta(agg0,
+                prevState, applied, p.sink.keys, av.groupCol,
+                av.valueCol), batchId))
             }
           }
           if (p.action == "upsertInto" || p.action == "deleteFrom" ||
@@ -272,21 +272,14 @@ object CdcPipeline {
             // these actions consume mixed update+erase batches natively
             // (upsert drops erased keys; delete ignores update rows;
             // merge deletes on erase) — one state rewrite handles both
-            withRetry(p, st) { withTimeout(spark, p) {
-              p.sink.apply(transformed.unionByName(erases), p.action)
-            } }
+            guarded(p.sink.apply(transformed.unionByName(erases), p.action))
           } else {
             // insertInto/updateOn ignore erase rows: route erases
             // through the delete query's own action, as the reference
             // does regardless of the update action mode
             // (CdcMsgParser.java:144-157)
-            withRetry(p, st) { withTimeout(spark, p) {
-              p.sink.apply(transformed, p.action)
-            } }
-            if (nErase > 0)
-              withRetry(p, st) { withTimeout(spark, p) {
-                p.sink.apply(erases, p.deleteAction)
-              } }
+            guarded(p.sink.apply(transformed, p.action))
+            if (nErase > 0) guarded(p.sink.apply(erases, p.deleteAction))
           }
           st.rowsWritten += nRows
       }
@@ -300,21 +293,25 @@ object CdcPipeline {
     }
   }
 
-  /** Start the streaming query (one per consumer, own checkpoint —
-    * the reference's independent consumer progress, Application.java:
-    * 93-102). `changelogDir` may be a directory (file replay) or a
+  /** The pipeline's changelog as a (value, seq) stream.
+    * `changelogDir` may be a directory (file replay) or a
     * `topic://name` URI (the DSv2 topic source, O1's real front door);
     * for topics the admission cap is offsets rather than files, scaled
     * by the ~100 envelopes/file the replay writer produces.
     */
+  def source(spark: SparkSession, p: Pipeline): DataFrame =
+    if (p.changelogDir.startsWith("topic://"))
+      Changelog.readTopicStream(spark,
+        p.changelogDir.stripPrefix("topic://"),
+        maxOffsetsPerTrigger = p.maxFilesPerTrigger.toLong * 100)
+    else Changelog.readStream(spark, p.changelogDir, p.maxFilesPerTrigger)
+
+  /** Start the streaming query over [[source]] (one per consumer, own
+    * checkpoint — the reference's independent consumer progress,
+    * Application.java:93-102).
+    */
   def start(spark: SparkSession, p: Pipeline): StreamingQuery =
-    startWithSource(spark, p,
-      if (p.changelogDir.startsWith("topic://"))
-        Changelog.readTopicStream(spark,
-          p.changelogDir.stripPrefix("topic://"),
-          maxOffsetsPerTrigger = p.maxFilesPerTrigger.toLong * 100)
-      else
-        Changelog.readStream(spark, p.changelogDir, p.maxFilesPerTrigger))
+    startWithSource(spark, p, source(spark, p))
 
   /** Same pipeline over any (value, seq) streaming source — e.g. the
     * topic source (`Changelog.readTopicStream`), the reference's
@@ -341,10 +338,11 @@ object CdcPipeline {
   }
 
   /** JSON string escape — `status` embeds raw exception messages from
-    * retries, which can contain quotes/backslashes/newlines; emitting
-    * them unescaped would make /status invalid JSON mid-retry.
+    * retries, and `/config` warnings embed Spark error messages, which
+    * can contain quotes/backslashes/newlines; emitting them unescaped
+    * would make the JSON invalid.
     */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -31,8 +31,14 @@ object PlanBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
       .queryExecution.analyzed
 
-  def experimental(spark: SparkSession)
-      : org.apache.spark.sql.ExperimentalMethods =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  /** Idempotently prepend a planner strategy on an already-built
+    * session — for sessions built without `GraftExtensions`.
+    */
+  def install(spark: SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .experimental
+    if (!exp.extraStrategies.contains(strategy))
+      exp.extraStrategies = strategy +: exp.extraStrategies
+  }
 }

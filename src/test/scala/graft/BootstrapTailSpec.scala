@@ -61,9 +61,10 @@ class BootstrapTailSpec extends AnyFunSuite with StopStreamsAfterAll {
   def sinkRows(s: KeyedTableSink): Set[(Long, String, Option[Long])] =
     s.load().collect().map(tuple3).toSet
 
-  def pipeline(tag: String, live: String): CdcPipeline.Pipeline = {
+  def pipeline(tag: String, live: String,
+      numBuckets: Int = 0): CdcPipeline.Pipeline = {
     val sink = new KeyedTableSink(spark, freshDir(s"$tag-sink"),
-      Seq("user_id"), sinkSchema)
+      Seq("user_id"), sinkSchema, numBuckets)
     CdcPipeline.Pipeline(s"test-$tag", live, freshDir(s"$tag-ckpt"),
       schema,
       Some("SELECT user_id, event_type, value_milli FROM rows"),
@@ -174,20 +175,23 @@ class BootstrapTailSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("loadSnapshot seeds the sink from a snapshot table; tail " +
       "applies only the delta") {
-    val (staging, live, files) = stage("bt4", 6, 3)
-    val p = pipeline("bt4", live)
-    // the snapshot a production consumer would scan from the source
-    // table: the transformed LWW state at the cutoff
-    val typed = CdcParse.parseEnvelope(
-      Changelog.readBatch(spark, live), "value", schema)
-      .filter(col("op") =!= CdcParse.OpDrop)
-    val cutoff = typed.agg(max(col("seq"))).first().getLong(0)
-    val state = KeyedMerge.lww(typed, Seq("user_id"), "seq")
-      .filter(col("op") =!= CdcParse.OpErase)
-      .select("user_id", "event_type", "value_milli")
-    assert(BootstrapTail.loadSnapshot(p, state, cutoff) === cutoff)
-    copyIn(live, files.drop(3))
-    BootstrapTail.tail(spark, p, cutoff).awaitTermination(120000)
-    assert(sinkRows(p.sink) === golden(staging))
+    // flat and bucketed sinks take the same snapshot
+    Seq(0, 32).foreach { numBuckets =>
+      val (staging, live, files) = stage(s"bt4-$numBuckets", 6, 3)
+      val p = pipeline(s"bt4-$numBuckets", live, numBuckets)
+      // the snapshot a production consumer would scan from the source
+      // table: the transformed LWW state at the cutoff
+      val typed = CdcParse.parseEnvelope(
+        Changelog.readBatch(spark, live), "value", schema)
+        .filter(col("op") =!= CdcParse.OpDrop)
+      val cutoff = typed.agg(max(col("seq"))).first().getLong(0)
+      val state = KeyedMerge.lww(typed, Seq("user_id"), "seq")
+        .filter(col("op") =!= CdcParse.OpErase)
+        .select("user_id", "event_type", "value_milli")
+      assert(BootstrapTail.loadSnapshot(p, state, cutoff) === cutoff)
+      copyIn(live, files.drop(3))
+      BootstrapTail.tail(spark, p, cutoff).awaitTermination(120000)
+      assert(sinkRows(p.sink) === golden(staging))
+    }
   }
 }

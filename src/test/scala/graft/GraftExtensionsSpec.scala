@@ -46,7 +46,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(s2.sql("SELECT morton(3, 5) AS z").head().getLong(0) === 39L)
 
     // the PLANNER strategy is injected by the plugin as well: an
-    // AsOfJoinNode constructed directly (no AsOfJoinStrategy.setup
+    // AsOfJoinNode constructed directly (no PlanBridge.install
     // call) must plan and execute on this session
     import s2.implicits._
     val l = Seq((1L, 10L, "l")).toDF("k", "t", "tag")

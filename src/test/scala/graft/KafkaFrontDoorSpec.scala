@@ -3,7 +3,7 @@ package graft
 import graft.config.YqlTranslate
 import graft.operators.CdcParse
 import graft.sinks.KeyedTableSink
-import graft.sources.{Changelog, KafkaShapedSource, TopicBroker}
+import graft.sources.{Changelog, TopicBroker, TopicSource}
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -38,7 +38,7 @@ class KafkaFrontDoorSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   def kafkaStream(topic: String, opts: (String, String)*): DataFrame = {
     var r = spark.readStream
-      .format("graft.sources.KafkaShapedSourceProvider")
+      .format("graft.sources.TopicSourceProvider")
       .option("subscribe", topic)
     opts.foreach { case (k, v) => r = r.option(k, v) }
     r.load()
@@ -77,7 +77,7 @@ class KafkaFrontDoorSpec extends AnyFunSuite with StopStreamsAfterAll {
       StructField("timestamp", TimestampType),
       StructField("timestampType", IntegerType)))
     assert(got === want)
-    assert(got === KafkaShapedSource.schema)
+    assert(got === TopicSource.schema)
     TopicBroker.delete(topic)
   }
 

@@ -104,7 +104,8 @@ class PlannedBandJoinSpec extends AnyFunSuite {
 
   test("SQL matcher: plain-text interval join plans BandJoinExec, " +
       "flag-off keeps Spark's plan, results identical") {
-    graft.plans.BandJoinStrategy.setup(spark)
+    org.apache.spark.sql.graftbridge.PlanBridge.install(spark,
+      graft.plans.BandJoinStrategy)
     Tables.registerAll(spark, TestSpark.sfDir)
     val sql =
       """SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b

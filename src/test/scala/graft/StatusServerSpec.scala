@@ -26,7 +26,9 @@ class StatusServerSpec extends AnyFunSuite {
       val s = new java.net.ServerSocket(0)
       try s.getLocalPort finally s.close()
     }
-    val srv = new StatusServer(port, Seq("warn \"w\""),
+    // validate() warnings embed Spark error messages, which span lines
+    val warning = "warn \"w\"\n  at line 2\tcol 3"
+    val srv = new StatusServer(port, Seq(warning),
       Seq("spec-server"), () => ())
     srv.start()
     try {
@@ -35,14 +37,15 @@ class StatusServerSpec extends AnyFunSuite {
       val status = get(port, "/status")
       // must parse as JSON despite the hostile status string (jackson
       // is on Spark's classpath)
-      val tree = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(status)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val tree = json.readTree(status)
       val row = (0 until tree.size).map(tree.get)
         .find(_.get("id").asText == "spec-server").get
       assert(row.get("status").asText.contains("\"quoted\""))
       assert(!row.get("ok").asBoolean)
-      val config = get(port, "/config")
-      assert(config.contains("spec-server"))
+      val config = json.readTree(get(port, "/config"))
+      assert(config.get("warnings").get(0).asText === warning)
+      assert(config.get("readers").get(0).asText === "spec-server")
     } finally {
       srv.stop()
       CdcPipeline.statuses.remove("spec-server")
