@@ -53,14 +53,7 @@ object Main {
         System.err.println(s"[graft] pipeline ${p.consumer} skipped")
         None // invalid pipeline skipped, engine continues
       } else {
-        // YQL-dialect configs (reference README format) are translated;
-        // plain Spark SQL passes through untouched
-        val translated = p.updateQuery.map { q =>
-          if (q.sql.contains("AS_TABLE") || q.sql.contains("DECLARE"))
-            graft.config.YqlTranslate(q.sql)
-          else graft.config.YqlTranslate.Translated(
-            q.actionMode, q.actionTable, q.sql, Nil)
-        }
+        val translated = p.updateQuery.map(PipelineConfig.translate)
         val sink = new KeyedTableSink(spark,
           s"$workDir/${p.consumer}", schema.pk, schema.columns)
         Some(CdcPipeline.start(spark, CdcPipeline.Pipeline(

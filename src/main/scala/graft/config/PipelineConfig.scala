@@ -74,10 +74,20 @@ object PipelineConfig {
     EngineConf(pipelines)
   }
 
+  /** The update query as the engine runs it: YQL-dialect SQL
+    * (reference README format) is translated, plain Spark SQL passes
+    * through untouched.
+    */
+  def translate(q: QueryDef): YqlTranslate.Translated =
+    if (q.sql.contains("AS_TABLE") || q.sql.contains("DECLARE"))
+      YqlTranslate(q.sql)
+    else YqlTranslate.Translated(q.actionMode, q.actionTable, q.sql, Nil)
+
   /** Startup validation (SURVEY.md §2 O11): changefeed path must
     * contain '/' (CdcMsgParser.java:105-110); transform SQL must
     * analyze against an empty batch of the declared schema; delete
-    * query may only reference PK columns (CdcMsgParser.java:216-221).
+    * query may only reference PK columns (CdcMsgParser.java:216-221);
+    * an aggregate view needs the upsert action and schema columns.
     * Returns warnings; a failed pipeline is skipped, not fatal
     * (Application.java:93-98).
     */
@@ -95,10 +105,6 @@ object PipelineConfig {
         vs.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       empty.createOrReplaceTempView("rows")
       graft.functions.GraftFunctions.register(vs)
-      def toSparkSql(sql: String): String =
-        if (sql.contains("AS_TABLE") || sql.contains("DECLARE"))
-          YqlTranslate(sql).sql
-        else sql
       p.updateQuery.foreach { q =>
         try {
           // STRICT type check on declared members (reference decoder
@@ -114,7 +120,7 @@ object PipelineConfig {
               else YdbTypes.toSpark(t) // throws UnsupportedYdbType
             }
           }
-          vs.sql(toSparkSql(q.sql)).queryExecution.analyzed
+          vs.sql(translate(q).sql).queryExecution.analyzed
         } catch { case e: Exception =>
           warnings += s"${p.consumer}: update query invalid: ${e.getMessage}"
         }
@@ -128,6 +134,17 @@ object PipelineConfig {
         } catch { case e: Exception =>
           warnings += s"${p.consumer}: delete query invalid: ${e.getMessage}"
         }
+      }
+      p.aggView.foreach { case (g, v) =>
+        val action = p.updateQuery.fold("upsertInto")(q =>
+          scala.util.Try(translate(q).actionMode).getOrElse(q.actionMode))
+        if (action != "upsertInto")
+          warnings += s"${p.consumer}: aggView requires actionMode " +
+            s"upsertInto, not $action"
+        val missing = Seq(g, v).filterNot(schema.fieldNames.contains)
+        if (missing.nonEmpty)
+          warnings += s"${p.consumer}: aggView column(s) not in schema: " +
+            missing.map(c => s"'$c'").mkString(",")
       }
     }
     warnings.toSeq

@@ -31,18 +31,19 @@ import org.apache.hadoop.fs.Path
   * silently lose the table). Unreferenced generation dirs and stale
   * tmp manifests are garbage-collected after each promote.
   *
-  * Scale design: with `numBuckets > 0` the state is hash-partitioned
-  * on the key into per-bucket generation dirs; a batch touches only
-  * the buckets its keys hash to, so the merge reads and rewrites ONLY
-  * those (manifest entries for untouched buckets carry over). Rewrite
-  * cost is proportional to the touched key space, not the table size —
-  * the property that keeps a 100 TB materialized view maintainable. A
+  * Layout: the state is hash-partitioned on the key into `numBuckets`
+  * (>= 1) per-bucket generation dirs; a batch touches only the buckets
+  * its keys hash to, so the merge reads and rewrites ONLY those
+  * (manifest entries for untouched buckets carry over). Keys are
+  * hashed, so a batch that is large next to the bucket count still
+  * touches nearly every bucket and rewrites nearly the whole table. A
   * lake format (Delta/Iceberg MERGE) would drop in behind the same
-  * interface. `numBuckets = 0` keeps a whole-table generation.
+  * interface.
   */
 class KeyedTableSink(spark: SparkSession, val path: String,
     val keys: Seq[String], val schema: StructType,
-    val numBuckets: Int = 0) {
+    val numBuckets: Int = 1) {
+  require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
 
   private val fs = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(path match {
@@ -54,9 +55,9 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   private val currentPath = new Path(root, "CURRENT")
   private val nextPath = new Path(root, "CURRENT.next")
 
-  // ---- manifest: lines of "<token>\t<relative-dir>"; token is "flat",
-  // the bucket number, or the "buckets" meta entry recording the hash
-  // fan-out the data was written with ----
+  // ---- manifest: lines of "<token>\t<relative-dir>"; token is the
+  // bucket number, or a meta entry: "buckets" (the hash fan-out the
+  // data was written with) or "epoch" ----
 
   private val MetaBuckets = "buckets"
   private val MetaEpoch = "epoch"
@@ -79,7 +80,7 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     fs.rename(nextPath, currentPath)
   }
 
-  /** Current live manifest: "flat" or bucket-number -> relative dir.
+  /** Current live manifest: bucket-number -> relative dir.
     * Public as an ops/inspection surface (which dirs are live).
     */
   def manifest(): Map[String, String] = {
@@ -95,21 +96,25 @@ class KeyedTableSink(spark: SparkSession, val path: String,
       }.toMap
       // refuse to mis-hash: a sink handle whose bucket fan-out differs
       // from what the table was written with would route keys to the
-      // wrong generation dirs and silently drop/duplicate state
+      // wrong generation dirs and silently drop/duplicate state; 0 is
+      // the retired whole-table ("flat") layout, which no handle opens
       val recorded = m.get(MetaBuckets).map(_.toInt)
         .getOrElse(if (m.contains("flat")) 0 else numBuckets)
       if (recorded != numBuckets)
-        throw new IllegalStateException(
-          s"table at $path was written with numBuckets=$recorded but " +
-            s"this sink was constructed with numBuckets=$numBuckets; " +
-            "open with the recorded count or run rebucket()")
+        throw new IllegalStateException(s"table at $path " + (
+          if (recorded == 0) "uses the retired whole-table (flat) " +
+            "layout; migrate it: read its generation dir " +
+            s"${new Path(root, m("flat"))} with spark.read.parquet " +
+            "and replace() that into a new sink"
+          else s"was written with numBuckets=$recorded but this sink " +
+            s"was constructed with numBuckets=$numBuckets; open with " +
+            "the recorded count or run rebucket()"))
       m
     }
   }
 
   private def writeManifest(m0: Map[String, String]): Unit = {
-    val m = if (numBuckets > 0) m0 + (MetaBuckets -> numBuckets.toString)
-      else m0 - MetaBuckets
+    val m = m0 + (MetaBuckets -> numBuckets.toString)
     val tmp = new Path(root, s"CURRENT.tmp-${uuid()}")
     val out = fs.create(tmp, true)
     try {
@@ -150,31 +155,12 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   def load(): DataFrame = readDirs(dataEntries(manifest()).values.toSeq)
 
-  /** Load only the given buckets (only their dirs are even listed —
-    * the pruning the old `__bucket=N` partition filter provided).
-    */
-  private def loadBuckets(m: Map[String, String],
-      buckets: Seq[Int]): DataFrame =
-    readDirs(buckets.flatMap(b => m.get(b.toString)))
-
   private def bucketOf = pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  /** Whole-table swap (flat mode): new generation + manifest promote;
-    * `meta` entries ride along in the new manifest.
-    */
-  private def swapIn(next: DataFrame,
-      meta: Map[String, String] = Map.empty): Unit = {
-    val gen = s"g-${uuid()}"
-    next.write.mode("overwrite").parquet(new Path(root, gen).toString)
-    val m = meta + ("flat" -> gen)
-    writeManifest(m)
-    gc(m)
-  }
-
-  /** Partial swap: write ONLY the touched buckets into a new
+  /** The one commit routine: write ONLY the given buckets into a new
     * generation (partitioned by bucket), then point their manifest
-    * entries at the new dirs; untouched buckets carry over. An
-    * emptied bucket (no rows survived) simply drops its entry.
+    * entries at the new dirs; entries of other buckets in `prev` carry
+    * over. An emptied bucket (no rows survived) simply drops its entry.
     */
   private def swapBuckets(prev: Map[String, String], next: DataFrame,
       buckets: Seq[Int]): Unit = {
@@ -227,28 +213,17 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   }
 
   /** Compact the table: rewrite live state into a fresh generation
-    * with `filesPerBucket` files per bucket (1 flat file when
-    * unbucketed). Long streams of small batches accumulate small
-    * parquet files per bucket generation; run this periodically (it
-    * is itself a crash-atomic manifest commit, so it can race nothing
-    * and replay-safely no-ops on identical state).
+    * with one file per bucket, keeping the recorded epoch. Long streams
+    * of small batches accumulate small parquet files per bucket
+    * generation; run this periodically (it is itself a crash-atomic
+    * manifest commit, so it can race nothing and replay-safely no-ops
+    * on identical state).
     */
-  def compact(filesPerBucket: Int = 1): Unit = {
-    val m = manifest()
-    if (m.isEmpty) return
-    if (numBuckets <= 0) swapIn(load().coalesce(filesPerBucket))
-    else {
-      val buckets = dataEntries(m).keys.filter(_ != "flat")
-        .map(_.toInt).toSeq.sorted
-      swapBuckets(m, loadBuckets(m, buckets)
-        .repartition(buckets.length * filesPerBucket,
-          bucketOf), buckets)
-    }
-  }
+  def compact(): Unit = replace(load(), lastEpoch.getOrElse(-1L))
 
-  /** Re-shard the table to a different hash fan-out (or to/from flat
-    * mode) and return the handle for the new layout; the old handle's
-    * reads fail fast afterwards (bucket-count guard). One full read +
+  /** Re-shard the table to a different hash fan-out and return the
+    * handle for the new layout; the old handle's reads fail fast
+    * afterwards (bucket-count guard). One full read +
     * one shuffled write — how a 100 TB table re-buckets — promoted by
     * the same crash-atomic manifest commit; old generations are GC'd
     * after the promote, so a crash anywhere leaves the old layout live.
@@ -266,10 +241,9 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * load, a re-shard, or a maintained projection whose next content
     * is computed from the previous generation (the incremental
     * aggregate view, whose output IS the complete new aggregate
-    * table). A bucketed sink hash-partitions `next` and swaps every
-    * bucket. Same crash-atomic manifest promote as `apply`; `next`
-    * may read the current generation (its files survive until the
-    * post-promote GC).
+    * table). Hash-partitions `next` and swaps every bucket. Same
+    * crash-atomic manifest promote as `apply`; `next` may read the
+    * current generation (its files survive until the post-promote GC).
     * `epoch` >= 0 is recorded in the manifest so a streaming replay of
     * the same foreachBatch epoch can detect the projection already
     * reflects this batch (`lastEpoch`) and skip — without it, a crash
@@ -279,8 +253,7 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   def replace(next: DataFrame, epoch: Long = -1L): Unit = {
     val meta: Map[String, String] =
       if (epoch >= 0) Map(MetaEpoch -> epoch.toString) else Map.empty
-    if (numBuckets <= 0) swapIn(next, meta)
-    else swapBuckets(meta, next.repartition(numBuckets, bucketOf),
+    swapBuckets(meta, next.repartition(numBuckets, bucketOf),
       0 until numBuckets)
   }
 
@@ -288,24 +261,19 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * write action (CdcMsgParser.java:225-248 dispatch).
     */
   def apply(batch: DataFrame, action: String): Unit = {
-    if (numBuckets <= 0) {
-      val state = load().cache()
-      state.count() // materialize before the swap invalidates the files
-      swapIn(merge(state, batch, action))
+    val cached = batch.cache()
+    val touched = cached.select(bucketOf.as("__b"))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    if (touched.nonEmpty) {
+      val m = manifest()
+      // materialize before the swap invalidates the files. Kept: on
+      // cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50 ~14% but
+      // raised heap_live_mb 13%, past the benchmark's 10% bound
+      val state = readDirs(touched.flatMap(b => m.get(b.toString))).cache()
+      state.count()
+      swapBuckets(m, merge(state, cached, action), touched)
       state.unpersist()
-    } else {
-      val cached = batch.cache()
-      val touched = cached.select(pmod(hash(keys.map(col): _*),
-          lit(numBuckets)).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.nonEmpty) {
-        val m = manifest()
-        val state = loadBuckets(m, touched).cache()
-        state.count()
-        swapBuckets(m, merge(state, cached, action), touched)
-        state.unpersist()
-      }
-      cached.unpersist()
     }
+    cached.unpersist()
   }
 }

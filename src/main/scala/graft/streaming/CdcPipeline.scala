@@ -37,9 +37,10 @@ object CdcPipeline {
   /** Maintained aggregate projection beside the main keyed table: a
     * per-`groupCol` (row count, `valueCol` sum) table kept current by
     * [[KeyedMerge.applyAggDelta]] each micro-batch — O(batch), never a
-    * rescan of the fact state. `sink` must be a flat (numBuckets=0)
-    * table; requires the upsert action (delta semantics) and a
-    * key-unique transform output (the apply contract).
+    * rescan of the fact state. `sink` is keyed on `groupCol` and
+    * rewritten whole each batch (`replace`); requires the upsert action
+    * (delta semantics) and a key-unique transform output (the apply
+    * contract).
     */
   case class AggView(sink: KeyedTableSink, groupCol: String,
     valueCol: String)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Bucketed keyed sink: same results as flat mode, but merges rewrite
-  * only the touched bucket directories.
+/** Bucketed keyed sink: same results at any bucket count, and merges
+  * rewrite only the touched bucket directories.
   */
 class BucketedSinkSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -25,25 +25,25 @@ class BucketedSinkSpec extends AnyFunSuite {
   def rows(s: KeyedTableSink): Set[(Long, Long)] =
     s.load().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("bucketed apply matches flat apply across actions") {
-    val flatDir = Files.createTempDirectory("flat").toString
+  test("one-bucket apply matches 8-bucket apply across actions") {
+    val oneDir = Files.createTempDirectory("one").toString
     val bukDir = Files.createTempDirectory("buk").toString
-    val flat = new KeyedTableSink(spark, flatDir, Seq("id"), schema)
+    val one = new KeyedTableSink(spark, oneDir, Seq("id"), schema)
     val buk = new KeyedTableSink(spark, bukDir, Seq("id"), schema,
       numBuckets = 8)
     val b1 = batch((1L, 10L, CdcParse.OpUpdate), (2L, 20L, CdcParse.OpUpdate),
       (3L, 30L, CdcParse.OpUpdate), (17L, 170L, CdcParse.OpUpdate))
-    flat.apply(b1, "upsertInto"); buk.apply(b1, "upsertInto")
-    assert(rows(flat) === rows(buk))
+    one.apply(b1, "upsertInto"); buk.apply(b1, "upsertInto")
+    assert(rows(one) === rows(buk))
     val b2 = batch((2L, 21L, CdcParse.OpUpdate), (3L, 0L, CdcParse.OpErase),
       (99L, 990L, CdcParse.OpUpdate))
-    flat.apply(b2, "upsertInto"); buk.apply(b2, "upsertInto")
-    assert(rows(flat) === rows(buk))
+    one.apply(b2, "upsertInto"); buk.apply(b2, "upsertInto")
+    assert(rows(one) === rows(buk))
     assert(rows(buk) === Set((1L, 10L), (2L, 21L), (17L, 170L),
       (99L, 990L)))
     val b3 = batch((1L, 0L, CdcParse.OpErase))
-    flat.apply(b3, "deleteFrom"); buk.apply(b3, "deleteFrom")
-    assert(rows(flat) === rows(buk))
+    one.apply(b3, "deleteFrom"); buk.apply(b3, "deleteFrom")
+    assert(rows(one) === rows(buk))
   }
 
   test("untouched bucket directories are not rewritten") {
@@ -69,6 +69,8 @@ class BucketedSinkSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("buk-compact").toString
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
+    // a maintained projection's recorded epoch must survive compaction
+    sink.replace(sink.load(), epoch = 7L)
     // many tiny batches -> many generations referenced per bucket
     (0L until 12L).foreach { i =>
       sink.apply(batch((i, i * 10, CdcParse.OpUpdate)), "upsertInto")
@@ -83,6 +85,7 @@ class BucketedSinkSpec extends AnyFunSuite {
     val filesBefore = parquetFiles()
     sink.compact()
     assert(rows(sink) === before) // state identical
+    assert(sink.lastEpoch === Some(7L))
     val filesAfter = parquetFiles()
     assert(filesAfter < filesBefore,
       s"compact did not shrink files: $filesBefore -> $filesAfter")
@@ -135,11 +138,33 @@ class BucketedSinkSpec extends AnyFunSuite {
     // merges keep working against the new layout
     re.apply(batch((7L, 777L, CdcParse.OpUpdate)), "upsertInto")
     assert(rows(re) === before - ((7L, 70L)) + ((7L, 777L)))
-    // flat-ward rebucket works too (the old handle is stale after)
+    // down to one bucket works too (the old handle is stale after)
     val expected = rows(re)
-    val flat = re.rebucket(0)
-    assert(rows(flat) === expected)
+    val one = re.rebucket(1)
+    assert(rows(one) === expected)
     intercept[IllegalStateException] { re.load() }
+  }
+
+  test("a table in the retired whole-table layout is refused, not read " +
+      "as empty") {
+    val dir = Files.createTempDirectory("buk-legacy").toString
+    // the manifest the whole-table layout wrote: one "flat" entry, no
+    // bucket count, its generation dir holding the rows
+    Seq((1L, 10L)).toDF("id", "v").write.parquet(s"$dir/g-0000aaaa")
+    Files.write(java.nio.file.Paths.get(dir, "CURRENT"),
+      "flat\tg-0000aaaa".getBytes("UTF-8"))
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema)
+    val e = intercept[IllegalStateException] { sink.load() }
+    assert(e.getMessage.contains("whole-table"), e.getMessage)
+    assert(e.getMessage.contains("spark.read.parquet"), e.getMessage)
+    intercept[IllegalStateException] {
+      sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
+    }
+    // the legacy data is untouched
+    assert(spark.read.parquet(s"$dir/g-0000aaaa").count() === 1)
+    intercept[IllegalArgumentException] {
+      new KeyedTableSink(spark, dir, Seq("id"), schema, numBuckets = 0)
+    }
   }
 
   test("emptied bucket disappears; replay is idempotent") {

@@ -71,12 +71,27 @@ class ConfigSpec extends AnyFunSuite {
         |  <query id="qd" actionMode="deleteFrom" actionTable="t">
         |    SELECT user_id, event_type FROM rows
         |  </query>
+        |  <cdc changefeed="t/cf" consumer="w2" actionMode="insertInto"
+        |       aggViewGroupCol="no_such_group" aggViewValueCol="value_milli">
+        |    SELECT user_id, event_type, value_milli FROM rows
+        |  </cdc>
+        |  <cdc changefeed="t/cf" consumer="w3"
+        |       aggViewGroupCol="event_type" aggViewValueCol="value_milli">
+        |    SELECT user_id, event_type, value_milli FROM rows
+        |  </cdc>
         |</config>""".stripMargin
     val warnings = PipelineConfig.validate(spark,
       PipelineConfig.fromXml(bad), schema, Seq("user_id"))
     assert(warnings.exists(_.contains("no table prefix")))
     assert(warnings.exists(_.contains("update query invalid")))
     assert(warnings.exists(_.contains("non-PK")))
+    // an aggView that could not run is skipped at startup instead of
+    // failing its first batch (insertInto) or Main (unknown column)
+    assert(warnings.exists(w => w.startsWith("w2:") &&
+      w.contains("aggView requires actionMode upsertInto")))
+    assert(warnings.exists(w => w.startsWith("w2:") &&
+      w.contains("'no_such_group'")))
+    assert(!warnings.exists(_.startsWith("w3:")), warnings.mkString("; "))
   }
 
   test("validation does not clobber a live `rows` view on the shared " +
