@@ -1,6 +1,8 @@
 package graft
 
+import graft.streaming.CdcPipeline
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Driver bench contract: one JSON line with total + per-query seconds.
@@ -69,16 +71,13 @@ import scala.util.control.NonFatal
   * it halved per-run coverage (21 probes vs the ≥50 bar in r10).
   */
 object Bench {
-  /** Cumulative stop-the-world GC milliseconds across all collectors —
-    * the per-query delta of this is recorded next to each timing so a
-    * noisy host's pause time is separable from plan time in the record
-    * (round-6 verdict ask #6: noise telemetry, not guesswork).
+  /** One timed derived-build or catalog entry: recorded seconds (-1
+    * failed, -2 rotation-deferred), min-of-2 spread, GC seconds across
+    * its runs, and the failure ("Class: message") of a failed entry.
     */
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-  }
+  private final case class Entry(name: String, sec: Double,
+      noise: Double = 0.0, gcSec: Double = 0.0,
+      failure: Option[String] = None)
 
   /** Stream-throughput floor under which the best-of-2 reading earns
     * ONE extra (post-GC) cycle. Provenance: identical code read
@@ -100,7 +99,6 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_TOTAL_BUDGET", "1800").toDouble
     def benchElapsed: Double = (System.nanoTime() - benchStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // pin the derived-table store to a path CHILD JVMs can share (the
     // isolated heavy probes below read the stored indexes this
     // process builds instead of rebuilding them per process)
@@ -121,44 +119,14 @@ object Bench {
       d
     }
     sys.props("graft.derived.dir") = derivedDir
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // StaticSQLConf (JVM-first-session only): the whole-stage-codegen
-      // compiled-class cache is an LRU of 100 entries by default; a
-      // 410-query catalog cycles it completely between a query's warmup
-      // and its timed run, so every single-run timing silently pays
-      // janino recompilation (~0.1-0.5 s/plan — measured as the r8
-      // suite reading 436 s vs 237 s on identical plans, and as r7's
-      // 164 s "noise_sum"). Sized to hold the whole catalog's classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Round 13 (guide §7.3): cap the plan-string renders that AQE
-      // emits per listener event — on nested cached plans the full
-      // render cost ~0.8 s/run of pure driver time (see QBench note).
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_PLAN_STR_LEN", "32768"))
-      // Round 13 (guide §2 — scale-adaptive partitioning): let AQE
-      // coalesce shuffle partitions INSIDE cached-plan materialization
-      // too (off by default). The engine's iterative operators cache
-      // every round (peel/CC/LPA/candidate tables), and with the
-      // default every exchange under a cache materializes at the
-      // static spark.sql.shuffle.partitions regardless of data volume
-      // — measured as 137-329 tasks per mid-tier graph query moving
-      // KBs (QBench: graph_2hop_reach 260 -> 12 tasks, warm 1.57 ->
-      // 0.42 s; graph_louvain_round 329 -> 19, 2.21 -> 1.01;
-      // pipeline_prepare 237 -> 77, 3.43 -> 2.87). Partitioning is
-      // sized by AQE's advisory bytes at ANY scale — at 100 TB the
-      // same setting right-sizes cached intermediates instead of
-      // inheriting a cluster-wide constant. Result-invariant: proven
-      // by the full 461-query oracle re-verify at sf0.01 + sf0.001
-      // with this conf set in Verify's session as well.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
+    // every timing goes through Measure; a failure is also reported
+    def timed(label: String)(body: => Any): Measure.Run = {
+      val r = Measure(spark)(body)
+      r.failure.foreach(f =>
+        System.err.println(s"[bench] $label failed: $f"))
+      r
+    }
     // Dev-only fast path: SPARK_GRAFT_THROUGHPUT_ONLY=1 skips the
     // suite/probes and measures just the two rows/s headline numbers
     // on a quiet box (the round-7 19.7k-vs-37k question needs a
@@ -181,17 +149,13 @@ object Bench {
       ("derived:lpalabels", operators.Ext28Queries.lpaLabelTable _),
       ("derived:cdcparsed", operators.CdcQueries.parsedStored _),
       ("derived:cclabelsbase", operators.Ext41Queries.baseCcLabels _))
-    val derivedSf: Seq[(String, Double, Double, Double)] =
+    val derivedSf: Seq[Entry] =
       (if (throughputOnly) Seq.empty else derivedBuilds)
         .map { case (name, fn) =>
-        val g0 = gcMillis
-        val t0 = System.nanoTime()
-        val sec = try { fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case NonFatal(_) => -1.0 }
-        (name, sec, 0.0, (gcMillis - g0) / 1e3)
+        val r = timed(name)(fn(spark, sfDir).count())
+        Entry(name, r.secOr(-1.0), gcSec = r.gcSec, failure = r.failure)
       }
-    val derivedBuildSec = derivedSf.map(_._2).filter(_ >= 0).sum
+    val derivedBuildSec = derivedSf.map(_.sec).filter(_ >= 0).sum
     // NOTE round 9: the separate whole-catalog warmup pass is gone —
     // each query's first (unrecorded for the back catalog: recorded
     // run is the SECOND) execution inside the timed loop below now
@@ -279,12 +243,9 @@ object Bench {
         timeoutSec: Double): Option[(Double, Double)] = try {
       val javaBin = java.nio.file.Paths
         .get(System.getProperty("java.home"), "bin", "java").toString
-      val opens = (Seq("java.lang", "java.lang.invoke",
-        "java.lang.reflect", "java.io", "java.net", "java.nio",
-        "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar"))
-        .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
+      // the child needs the same module opens this JVM was started with
+      val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens"))
       // the child heap is CAPPED independent of the parent's: a
       // single sf1 probe needs ~8-12g, and a child inheriting the
       // parent's 96g next to the parent's still-committed heap
@@ -292,8 +253,6 @@ object Bench {
       // vs 3.8 s isolated at 8g)
       val heap = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "12g")
       val cmd = (Seq(javaBin) ++ opens ++ Seq(s"-Xmx$heap",
-        "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
         s"-Dgraft.derived.dir=$derivedDir",
         "-cp", System.getProperty("java.class.path"),
         "graft.QBench", dataDir, name))
@@ -358,12 +317,11 @@ object Bench {
     val suiteChildRec =
       scala.collection.mutable.ListBuffer.empty[String]
     val queryResults = suiteOrder.map { case (name, fn) =>
+        val runs = scala.collection.mutable.ListBuffer.empty[Measure.Run]
         def once(): Double = {
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch {
-            case NonFatal(_) => return -1.0
-          }
-          (System.nanoTime() - t0) / 1e9
+          val r = timed(name)(fn(spark, sfDir).count())
+          runs += r
+          r.secOr(-1.0)
         }
         val childWarm: Option[Double] =
           if (!suiteChildTier.contains(name) ||
@@ -371,16 +329,15 @@ object Bench {
           else childProbe(name, sfDir, math.min(300.0,
             math.max(60.0, suiteDeadline - benchElapsed))).map(_._2)
         if (!inGateTier(name) && benchElapsed > suiteDeadline)
-          (name, -2.0, 0.0, 0.0) // rotation-deferred: timing only
+          Entry(name, -2.0) // rotation-deferred: timing only
         else if (childWarm.isDefined) {
           // fresh-child WARM run is the recorded number (the child's
           // cold leg carries JVM/session init, not the plan)
           suiteChildRec += name
           timedNow += name
-          (name, childWarm.get, 0.0, 0.0)
+          Entry(name, childWarm.get)
         }
         else {
-          val g0 = gcMillis
           val r1 = once()
           val (best, noise) =
             if (r1 < 0) (-1.0, 0.0) // deterministic failure: once
@@ -394,7 +351,6 @@ object Bench {
               val r2 = once()
               (if (r2 >= 0) r2 else r1, 0.0)
             }
-          val gcSec = (gcMillis - g0) / 1e3
           spark.catalog.clearCache()
           graft.operators.Ext9Queries.clearFitCache()
           // The inter-entry full GC exists so heavy entries measure
@@ -411,14 +367,19 @@ object Bench {
           // min-of-2); only the between-entry pause is conditional.
           if (best < 0 || best >= 0.3) System.gc()
           timedNow += name
-          (name, best, noise, gcSec)
+          // best < 0 only when the first run failed
+          Entry(name, best, noise, runs.map(_.gcSec).sum,
+            if (best < 0) runs.head.failure else None)
         }
     }
     val results = derivedSf ++ queryResults
     // -1 = failed; -2 = rotation-deferred (timing postponed to a later
     // round by the suite deadline, NOT a failure)
-    val failed = results.filter(r => r._2 < 0 && r._2 != -2.0).map(_._1)
-    val deferred = queryResults.count(_._2 == -2.0)
+    val failed = results.filter(r => r.sec < 0 && r.sec != -2.0).map(_.name)
+    val failures = results.flatMap(r => r.failure.map(f =>
+      s"${CdcPipeline.jsonStr(r.name)}:${CdcPipeline.jsonStr(f)}"))
+      .mkString("{", ",", "}")
+    val deferred = queryResults.count(_.sec == -2.0)
     // Persist the rotation stamp for every back-catalog query timed
     // this run, so the next run's rotating tier starts with whatever
     // this one deferred (same round-robin convergence as the sf1 map).
@@ -449,9 +410,8 @@ object Bench {
     // steady-state throughput is the MIN time, like the suite's
     // min-of-2 discipline
     val applySec = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries("cdc_apply_upsert")(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
+      Measure(spark)(SparkEntry.queries("cdc_apply_upsert")(spark, sfDir)
+        .count()).orThrow.sec
     }.min
     val rps = (nEvents / 2) / applySec // odd half is the changelog
     // full streaming pipeline rows/s: changelog files -> readStream ->
@@ -481,15 +441,13 @@ object Bench {
           srcParquet, clog, numFiles = 4)
         val sink = new graft.sinks.KeyedTableSink(spark, s"$tmp/sink",
           Seq("user_id"), schema, numBuckets = 32)
-        val p = graft.streaming.CdcPipeline.Pipeline("bench", clog,
+        val p = CdcPipeline.Pipeline("bench", clog,
           s"$tmp/ckpt", graft.operators.CdcParse.CdcSchema(schema,
             Seq("user_id")),
           Some("SELECT user_id, event_type, value_milli FROM rows"),
           None, sink, maxFilesPerTrigger = 4)
-        val t1 = System.nanoTime()
-        graft.streaming.CdcPipeline.start(spark, p)
-          .awaitTermination(600000)
-        (nn, (System.nanoTime() - t1) / 1e9)
+        (nn, Measure(spark)(CdcPipeline.start(spark, p)
+          .awaitTermination(600000)).orThrow.sec)
       }
       // Warm the STREAMING machinery on a tiny slice first (measured:
       // the first cycle in a JVM pays ~5-6 s of one-time stream/state
@@ -531,7 +489,8 @@ object Bench {
       if (base >= StreamRetryFloorRps) base
       else { System.gc(); math.max(base, measured()) }
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] stream section failed: ${e.getMessage}")
+      System.err.println(
+        s"[bench] stream section failed: ${Measure.describe(e)}")
       0.0
     }
     // Locale.ROOT: a comma-decimal default locale would render every
@@ -543,15 +502,14 @@ object Bench {
     // 8 derived:* build entries must not silently change the meaning
     // of either field round-over-round) — build cost stays broken out
     // under derived_build_sec and the labeled derived:* detail rows.
-    val total = queryResults.filter(_._2 >= 0).map(_._2).sum
-    val noiseSum = queryResults.map(_._3).sum
-    val gcSum = queryResults.map(_._4).sum
-    val detail = results.map { case (k, v, _, _) =>
-      s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val noiseDetail = results.map { case (k, _, n, _) =>
-      s"\"" + k + "\":" + fmt(n) }.mkString("{", ",", "}")
-    val gcDetail = results.map { case (k, _, _, g) =>
-      s"\"" + k + "\":" + fmt(g) }.mkString("{", ",", "}")
+    val total = queryResults.filter(_.sec >= 0).map(_.sec).sum
+    val noiseSum = queryResults.map(_.noise).sum
+    val gcSum = queryResults.map(_.gcSec).sum
+    def perEntry(v: Entry => Double): String = results.map(r =>
+      s"\"" + r.name + "\":" + fmt(v(r))).mkString("{", ",", "}")
+    val detail = perEntry(_.sec)
+    val noiseDetail = perEntry(_.noise)
+    val gcDetail = perEntry(_.gcSec)
     // Scaling evidence: the same queries at 1/100th and 1/10th of the
     // bench SF — near-flat small-SF floor + sublinear growth is the
     // direct signature of scan-bound plans (vs superlinear shuffles).
@@ -563,12 +521,9 @@ object Bench {
       sfs.flatMap { sf =>
         probes.flatMap { name =>
           SparkEntry.queries.get(name).map { fn =>
-            val t0 = System.nanoTime()
-            val sec =
-              try { fn(spark, sf).count()
-                (System.nanoTime() - t0) / 1e9 }
-              catch { case NonFatal(_) => -1.0 }
-            s"\"${sf.split('/').last}:$name\":${fmt(sec)}"
+            val label = s"${sf.split('/').last}:$name"
+            s"\"$label\":${fmt(timed(label)(fn(spark, sf).count())
+              .secOr(-1.0))}"
           }
         }
       }.mkString("{", ",", "}")
@@ -580,7 +535,7 @@ object Bench {
     // and flush the contract line NOW so a timeout mid-probe still
     // leaves a parsed artifact in the stdout tail; the final line at
     // the end of main (with sf1 totals) supersedes it on a clean run.
-    val byName = results.map(r => r._1 -> r._2).toMap
+    val byName = results.map(r => r.name -> r.sec).toMap
     val qs = headline.flatMap(n => byName.get(n).map(v =>
       s"\"" + n + "\":" + fmt(v))).mkString("{", ",", "}")
     // n_queries = catalog size; n_timed = queries with a recorded
@@ -594,7 +549,7 @@ object Bench {
     // r10 ADVICE asked the label to disclose the split methodology
     // so round-over-round comparators can tell which entries
     // step-changed by method rather than by plan.
-    val nTimed = queryResults.count(_._2 >= 0)
+    val nTimed = queryResults.count(_.sec >= 0)
     def headlineLine(sf1Head: String, partial: Boolean): String =
       s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${queryResults.size},"n_timed":$nTimed,"n_deferred":$deferred,"n_suite_child":${suiteChildRec.size},"derived_build_sec":${fmt(derivedBuildSec)},"runs_headline":2,"runs_stream":${streamCycleRps.size},"record_other":"warm2nd|child_warm"${if (partial) ",\"partial\":true" else ""},"noise_sum_sec":${fmt(noiseSum)},"gc_sum_sec":${fmt(gcSum)}$sf1Head,"queries":$qs,"cdc_rows_per_sec":${rps.toLong},"cdc_stream_rows_per_sec":${streamRps.toLong},"value":${fmt(total)}}"""
     // File fallback for the stdout contract (round-8 verdict ask #1):
@@ -722,7 +677,7 @@ object Bench {
     // suite completions recorded via a fresh child JVM are excluded —
     // the parent process never ran those plans, so nothing transferred.
     val suiteWarmed: Set[String] =
-      queryResults.filter(_._2 >= 0).map(_._1).toSet --
+      queryResults.filter(_.sec >= 0).map(_.name).toSet --
         suiteChildRec
     // the budget is charged WALL-CLOCK — a probe that fails after ten
     // minutes must count against the cap exactly like a slow success,
@@ -739,12 +694,8 @@ object Bench {
         val entry =
           if (sf1Elapsed > sf1Budget) """{"cold":-2.0,"warm":-2.0}"""
           else {
-            def once(): Double = {
-              val t0 = System.nanoTime()
-              try { fn(spark, sf1Dir).count()
-                (System.nanoTime() - t0) / 1e9 }
-              catch { case NonFatal(_) => -1.0 }
-            }
+            def once(): Double =
+              timed(s"sf1:$name")(fn(spark, sf1Dir).count()).secOr(-1.0)
             val cold = once()
             val warm = if (cold < 0) -1.0 else once()
             if (warm > 0) sf1Total += warm
@@ -783,10 +734,7 @@ object Bench {
                 // artifact (graph_link_predict measured warm 37 s >
                 // cold 15 s in-suite vs 7.7 s isolated)
                 System.gc()
-                val t0 = System.nanoTime()
-                try { fn(spark, sf1Dir).count()
-                  (System.nanoTime() - t0) / 1e9 }
-                catch { case NonFatal(_) => -1.0 }
+                timed(s"sf1:$name")(fn(spark, sf1Dir).count()).secOr(-1.0)
               }
               // Coverage mode (r10 verdict ask #3 — the kept artifact
               // carried 21 probes vs the ≥50 bar): entries with PRIOR
@@ -884,7 +832,7 @@ object Bench {
     if (!throughputOnly)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"sf":"$sfDir","n_queries":${queryResults.size},"n_entries":${results.size},"n_timed":$nTimed,"n_deferred":$deferred,"suite_child_jvm":${suiteChildRec.map("\"" + _ + "\"").mkString("[", ",", "]")},"total_sec":${fmt(total)},"derived_build_sec":${fmt(derivedBuildSec)},"runs_headline":2,"runs_stream":${streamCycleRps.size},"record_other":"warm2nd|child_warm","noise_sum_sec":${fmt(noiseSum)},"gc_sum_sec":${fmt(gcSum)},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"cdc_rows_per_sec":${rps.toLong},"cdc_stream_rows_per_sec":${streamRps.toLong},"stream_cycles_rps":${streamCycleRps.map(r => r.toLong.toString).mkString("[", ",", "]")},"scaling":$scaling,"sf1_probe":$sf1,"sf1_warm_total_sec":${fmt(sf1Total)},"sf1_cold_total_sec":${fmt(sf1ColdTotal)},"noise":$noiseDetail,"gc":$gcDetail,"queries":$detail}""".getBytes("UTF-8"))
+      s"""{"sf":"$sfDir","n_queries":${queryResults.size},"n_entries":${results.size},"n_timed":$nTimed,"n_deferred":$deferred,"suite_child_jvm":${suiteChildRec.map("\"" + _ + "\"").mkString("[", ",", "]")},"total_sec":${fmt(total)},"derived_build_sec":${fmt(derivedBuildSec)},"runs_headline":2,"runs_stream":${streamCycleRps.size},"record_other":"warm2nd|child_warm","noise_sum_sec":${fmt(noiseSum)},"gc_sum_sec":${fmt(gcSum)},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"failures":$failures,"cdc_rows_per_sec":${rps.toLong},"cdc_stream_rows_per_sec":${streamRps.toLong},"stream_cycles_rps":${streamCycleRps.map(r => r.toLong.toString).mkString("[", ",", "]")},"scaling":$scaling,"sf1_probe":$sf1,"sf1_warm_total_sec":${fmt(sf1Total)},"sf1_cold_total_sec":${fmt(sf1ColdTotal)},"noise":$noiseDetail,"gc":$gcDetail,"queries":$detail}""".getBytes("UTF-8"))
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     // sf1_total_sec = sum of WARM probe seconds (steady-state shape);

@@ -1,115 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only single-query timer: `runMain graft.QBench <sfDir> <query>...`
-  * — same session shape as Bench, prints per-query cold + warm seconds.
+  * — same session shape as Bench, prints per-query cold + warm seconds
+  * and the warm run's jobs, stages and tasks (`Measure`).
+  * `SPARK_GRAFT_JOBLOG=1` adds each job's seconds, `SPARK_GRAFT_EXPLAIN=1`
+  * the formatted physical plan.
   */
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, same rationale as Bench: don't let the 100-entry
-      // codegen class cache bill recompilation to the warm run
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Round 13 (guide §7.3): AQE renders the FULL plan string for
-      // every SQLExecutionStart/AdaptiveExecutionUpdate listener
-      // event even with the UI off; on deeply-nested cached plans
-      // (graph_kcore's 4 peel rounds) that string is ~1 MB and the
-      // render (regex nodeName + tree walk) was ~0.8 s of every warm
-      // run — pure driver overhead, measured by main-thread stack
-      // sampling. Cap the rendered length; results are untouched.
-      // Full length is kept in explain mode so plan dumps stay whole.
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_PLAN_STR_LEN",
-          if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-            "2147483632" else "32768"))
-      // same engine conf as Bench (round 13): AQE coalescing inside
-      // cached-plan materialization — see Bench.scala for the numbers.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    // Dev-only A/B hook: extra session confs as "k=v;k=v" — lets a
-    // tuning experiment run without recompiling (the accepted confs
-    // then graduate into Bench.scala explicitly, never via env).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    // Dev-only fixed-cost telemetry (round-13): count scheduler work
-    // per run — jobs, stages, tasks. The driver host runs the suite
-    // 1.5x slower at local[32] than local[8] on identical plans
-    // (BENCH_r12 321 s vs BENCH_r12_c8 214 s), which is the signature
-    // of per-stage/per-task overhead, not compute; these counters are
-    // the host-independent proxy for that overhead.
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val jobStartNs = new java.util.concurrent.ConcurrentHashMap[
-      Int, Long]()
-    val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[
-      String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          jobStartNs.put(j.jobId, System.nanoTime()); ()
-        }
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = jobStartNs.remove(j.jobId)
-          if (t0 != 0L) jobLog.add(
-            f"job ${j.jobId} ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
-        }
-      })
+    val spark = Sessions.local("graft-qbench")
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    // plan dumps stay whole in explain mode
+    if (explain)
+      spark.conf.set("spark.sql.maxPlanStringLength", "2147483632")
     args.tail.foreach { name =>
       val fn = SparkEntry.queries(name)
       // cold means cold: no plan cache or memoized fit from a
       // previous query in the same process
       spark.catalog.clearCache()
       graft.operators.Ext9Queries.clearFitCache()
-      def once(): (Double, Long, Long, Long) = {
-        val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        ((System.nanoTime() - t0) / 1e9,
-          jobs.get - j0, stages.get - s0, tasks.get - k0)
-      }
-      def compileMs: Long = org.apache.spark.metrics.source
-        .CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot
-        .getValues.sum
-      val c0 = compileMs
-      val (cold, _, _, _) = once()
-      val cComp = compileMs - c0
-      val (warm, j, s, k) = once()
-      val wComp = compileMs - c0 - cComp
-      println(f"[qbench] $name cold=$cold%.2fs warm=$warm%.2fs " +
-        s"jobs=$j stages=$s tasks=$k " +
-        s"compile_cold=${cComp}ms compile_warm=${wComp}ms")
-      if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) {
-        import scala.jdk.CollectionConverters._
-        println(s"[qbench-jobs] $name: " +
-          jobLog.asScala.mkString(" | "))
-      }
-      jobLog.clear()
-      if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
+      def once() = Measure(spark)(fn(spark, sfDir).count()).orThrow
+      val cold = once()
+      val warm = once()
+      println(f"[qbench] $name cold=${cold.sec}%.2fs warm=${warm.sec}%.2fs " +
+        s"jobs=${warm.jobs} stages=${warm.stages} tasks=${warm.tasks}")
+      if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1"))
+        println(s"[qbench-jobs] $name: " + (cold.jobSec ++ warm.jobSec)
+          .map { case (id, s) => f"job $id $s%.2fs" }.mkString(" | "))
+      if (explain)
         println(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted")))

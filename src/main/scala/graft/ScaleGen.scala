@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 scaling-probe data generator: replicates the driver's sf0.1
@@ -29,14 +29,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "sf1data"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scalegen")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String): Unit = {

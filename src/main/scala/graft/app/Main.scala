@@ -4,7 +4,6 @@ import graft.config.PipelineConfig
 import graft.operators.CdcParse
 import graft.sinks.KeyedTableSink
 import graft.streaming.CdcPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** CLI entry (SURVEY.md §3.1 control plane): load the reference-format
@@ -23,16 +22,7 @@ import org.apache.spark.sql.types._
 object Main {
   def main(args: Array[String]): Unit = {
     val Array(configPath, changelogDir, workDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-cdc")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-cdc")
 
     val schema = CdcParse.CdcSchema(
       StructType(Seq(

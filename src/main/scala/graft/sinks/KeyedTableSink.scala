@@ -23,13 +23,21 @@ import org.apache.hadoop.fs.Path
   *      the manifest AND all dirs it references are complete)
   *   3. delete `CURRENT`, rename `CURRENT.next` -> `CURRENT`
   *
-  * A crash in any window rolls FORWARD: if `CURRENT.next` exists on
-  * the next read/apply, it is promoted (its data was durable before it
-  * appeared). There is never a moment with no recoverable state — the
-  * failure mode the old rename-swap had (crash between renames left no
-  * data dir, so a streaming replay would merge against empty state and
-  * silently lose the table). Unreferenced generation dirs and stale
-  * tmp manifests are garbage-collected after each promote.
+  * A crash in any window rolls FORWARD: a present `CURRENT.next` is
+  * the live manifest (its data was durable before it appeared), and
+  * the next `apply`, `replace` or `startupGc` promotes it. There is
+  * never a moment with no recoverable state — the failure mode the old
+  * rename-swap had (crash between renames left no data dir, so a
+  * streaming replay would merge against empty state and silently lose
+  * the table). Unreferenced generation dirs and stale tmp manifests are
+  * garbage-collected after each promote.
+  *
+  * Reader contract: reads (`load`, `exists`, `lastEpoch`, `manifest`)
+  * never write. They parse `CURRENT.next` if it exists, else
+  * `CURRENT`, and retry when a concurrent promote renames the file away
+  * under them; only the writer promotes. Superseded generations are
+  * still gc'd right after each promote, so a read that listed them
+  * before the promote can fail (no retention yet).
   *
   * Layout: the state is hash-partitioned on the key into `numBuckets`
   * (>= 1) per-bucket generation dirs; a batch touches only the buckets
@@ -72,24 +80,34 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     */
   def lastEpoch: Option[Long] = manifest().get(MetaEpoch).map(_.toLong)
 
-  /** Roll forward a crash that happened mid-promote: CURRENT.next is
-    * only ever written AFTER its data dirs are complete, so it wins.
+  /** Promote (writer only): roll CURRENT.next onto CURRENT. CURRENT.next
+    * is only ever written AFTER its data dirs are complete, so it wins.
     */
   private def recover(): Unit = if (fs.exists(nextPath)) {
     if (fs.exists(currentPath)) fs.delete(currentPath, false)
     fs.rename(nextPath, currentPath)
   }
 
+  /** The live manifest's text, without writing: CURRENT.next if present
+    * (complete, maybe not yet promoted), else CURRENT. A promote can
+    * rename the file away between the probes; a second round finds it.
+    */
+  private def readManifest(): Option[String] = {
+    def read(p: Path) = try {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+    Iterator(nextPath, currentPath, nextPath, currentPath).map(read)
+      .collectFirst { case Some(txt) => txt }
+  }
+
   /** Current live manifest: bucket-number -> relative dir.
     * Public as an ops/inspection surface (which dirs are live).
     */
-  def manifest(): Map[String, String] = {
-    recover()
-    if (!fs.exists(currentPath)) Map.empty
-    else {
-      val in = fs.open(currentPath)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  def manifest(): Map[String, String] = readManifest() match {
+    case None => Map.empty
+    case Some(txt) =>
       val m = txt.linesIterator.filter(_.nonEmpty).map { l =>
         val Array(tok, dir) = l.split("\t", 2)
         tok -> dir
@@ -110,10 +128,12 @@ class KeyedTableSink(spark: SparkSession, val path: String,
             s"was constructed with numBuckets=$numBuckets; open with " +
             "the recorded count or run rebucket()"))
       m
-    }
   }
 
   private def writeManifest(m0: Map[String, String]): Unit = {
+    // promote a crashed writer's CURRENT.next (m0 was read from it)
+    // so the rename below has a free target
+    recover()
     val m = m0 + (MetaBuckets -> numBuckets.toString)
     val tmp = new Path(root, s"CURRENT.tmp-${uuid()}")
     val out = fs.create(tmp, true)
@@ -208,8 +228,8 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * in-flight generation dirs are unreferenced by design.
     */
   def startupGc(): Unit = {
-    val m = manifest() // manifest() rolls CURRENT.next forward first
-    if (fs.exists(root)) gc(m)
+    recover()
+    if (fs.exists(root)) gc(manifest())
   }
 
   /** Compact the table: rewrite live state into a fresh generation

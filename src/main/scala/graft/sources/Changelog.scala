@@ -20,12 +20,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object ChangelogGen {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-changelog-gen")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-changelog-gen")
     val n = Changelog.writeFromEvents(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 5)
     println(s"[changelog-gen] wrote $n envelopes to ${args(1)}")

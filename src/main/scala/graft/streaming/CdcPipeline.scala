@@ -122,42 +122,52 @@ object CdcPipeline {
   }
 
   /** Enforce the per-pipeline transform deadline (XmlConfig.java:
-    * 139-144, YdbService.java:160-173): run `body` on a watchdogged
-    * thread inside its own Spark job group; past the deadline the
-    * group's jobs are cancelled and a TimeoutException surfaces —
-    * which the caller's `withRetry` treats like any other transient
-    * failure, matching the reference's timeout->retry semantics.
+    * 139-144, YdbService.java:160-173): run `body` on the calling
+    * thread under its own Spark job tag; at the deadline the watchdog
+    * cancels the tagged jobs, and once `body` has returned or thrown a
+    * TimeoutException surfaces — which the caller's `withRetry` treats
+    * like any other transient failure, matching the reference's
+    * timeout->retry semantics. The body never outlives the call, so a
+    * retry never overlaps the timed-out attempt on a single-writer sink.
     */
   private[graft] def withTimeout[T](spark: SparkSession, p: Pipeline)
       (body: => T): T = {
     if (p.timeoutSeconds <= 0) return body
     val sc = spark.sparkContext
-    val group = s"graft-${p.consumer}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val fut = exec.submit(new java.util.concurrent.Callable[T] {
-      override def call(): T = {
-        sc.setJobGroup(group, s"${p.consumer} batch transform",
-          interruptOnCancel = true)
-        try body finally sc.clearJobGroup()
-      }
-    })
-    try fut.get(p.timeoutSeconds.toLong,
+    val tag = s"graft-timeout-${java.util.UUID.randomUUID()}"
+    val expired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val interrupt = "spark.job.interruptOnCancel"
+    val prevInterrupt = sc.getLocalProperty(interrupt)
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(true)
+    val cancel: Runnable = () => {
+      expired.set(true)
+      sc.cancelJobsWithTag(tag)
+    }
+    val deadline = watchdog.schedule(cancel, p.timeoutSeconds.toLong,
       java.util.concurrent.TimeUnit.SECONDS)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        sc.cancelJobGroup(group)
-        fut.cancel(true)
-        throw new java.util.concurrent.TimeoutException(
-          s"${p.consumer}: batch transform exceeded " +
-            s"${p.timeoutSeconds}s (timeoutSeconds)")
-      case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause match {
-          case ex: Exception => ex
-          case t => new RuntimeException(t)
-        }
-    } finally exec.shutdown()
+    val result = try scala.util.Try(body) finally {
+      deadline.cancel(false)
+      sc.removeJobTag(tag)
+      sc.setLocalProperty(interrupt, prevInterrupt)
+    }
+    if (expired.get) {
+      val e = new java.util.concurrent.TimeoutException(
+        s"${p.consumer}: batch transform exceeded " +
+          s"${p.timeoutSeconds}s (timeoutSeconds)")
+      result.failed.foreach(e.initCause)
+      throw e
+    }
+    result.get
   }
+
+  /** One process-wide daemon thread fires every batch deadline. */
+  private lazy val watchdog =
+    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
+      val t = new Thread(r, "graft-batch-watchdog")
+      t.setDaemon(true)
+      t
+    }
 
   /** Run one micro-batch through parse -> LWW -> transform -> apply.
     * Public so batch jobs and tests can drive the identical code path

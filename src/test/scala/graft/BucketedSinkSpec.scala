@@ -109,10 +109,34 @@ class BucketedSinkSpec extends AnyFunSuite {
     assert(cur.delete())
     // next read recovers the state instead of silently starting empty
     assert(rows(sink) === Set((1L, 10L)))
-    assert(cur.exists() && !next.exists())
     // replay after "restart" still merges against recovered state
     sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
+    // the writer rolled CURRENT.next forward
+    assert(cur.exists() && !next.exists())
     assert(rows(sink) === Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("reads never write: with CURRENT and CURRENT.next on disk, " +
+      "load() returns the .next state and leaves both files untouched") {
+    val dir = Files.createTempDirectory("buk-ro").toString
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
+      numBuckets = 4)
+    sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
+    val cur = new java.io.File(s"$dir/CURRENT").toPath
+    val old = Files.readAllBytes(cur)
+    sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
+    // a writer stopped between "CURRENT.next appears" and the promote:
+    // both manifests on disk, CURRENT the older one
+    val next = new java.io.File(s"$dir/CURRENT.next").toPath
+    Files.move(cur, next)
+    Files.write(cur, old)
+    // Hadoop's checksum of the moved manifest no longer matches CURRENT
+    Files.deleteIfExists(new java.io.File(s"$dir/.CURRENT.crc").toPath)
+    val newer = Files.readAllBytes(next)
+    assert(rows(sink) === Set((1L, 10L), (2L, 20L)))
+    assert(sink.exists && sink.lastEpoch.isEmpty)
+    assert(Files.readAllBytes(cur).sameElements(old))
+    assert(Files.readAllBytes(next).sameElements(newer))
   }
 
   test("rebucket re-shards state; mismatched handle fails fast") {

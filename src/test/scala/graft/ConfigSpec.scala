@@ -189,6 +189,21 @@ class ConfigSpec extends AnyFunSuite {
     assert(st.status === "RECOVERED")
   }
 
+  test("timeoutSeconds: withTimeout returns only after an overrunning " +
+      "body has finished, so a retry never overlaps it") {
+    import graft.streaming.CdcPipeline
+    val p = pipelineStub(timeoutSeconds = 1)
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // no Spark job to cancel: the body outlives the deadline
+    assertThrows[java.util.concurrent.TimeoutException] {
+      CdcPipeline.withTimeout(spark, p) {
+        Thread.sleep(2500)
+        finished.set(true)
+      }
+    }
+    assert(finished.get(), "withTimeout returned while the body still ran")
+  }
+
   test("threadsCount sizes the batch's shuffle partitions and is " +
       "restored afterwards (XmlConfig.java:19,132-137)") {
     import graft.streaming.CdcPipeline
