@@ -243,16 +243,18 @@ object Bench {
         timeoutSec: Double): Option[(Double, Double)] = try {
       val javaBin = java.nio.file.Paths
         .get(System.getProperty("java.home"), "bin", "java").toString
-      // the child needs the same module opens this JVM was started with
-      val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens"))
+      // the child needs the same module opens and -Dspark.* settings
+      // (Sessions) this JVM was started with
+      val inherited = java.lang.management.ManagementFactory
+        .getRuntimeMXBean.getInputArguments.asScala.toSeq
+        .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
       // the child heap is CAPPED independent of the parent's: a
       // single sf1 probe needs ~8-12g, and a child inheriting the
       // parent's 96g next to the parent's still-committed heap
       // thrashes the box (measured q32 warm 65 s > cold 23 s that way
       // vs 3.8 s isolated at 8g)
       val heap = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "12g")
-      val cmd = (Seq(javaBin) ++ opens ++ Seq(s"-Xmx$heap",
+      val cmd = (Seq(javaBin) ++ inherited ++ Seq(s"-Xmx$heap",
         s"-Dgraft.derived.dir=$derivedDir",
         "-cp", System.getProperty("java.class.path"),
         "graft.QBench", dataDir, name))

@@ -13,6 +13,8 @@ import scala.util.control.NonFatal
   * GC seconds (a noisy host's pauses, separable from plan time), the
   * Spark jobs, stages and tasks scheduled, each job's seconds, and the
   * failure. Counters are process-wide deltas: runs must not overlap.
+  * They are best-effort: the listener bus delivers asynchronously, so
+  * events still queued when the post-run wait ends count in the next run.
   */
 object Measure {
   final case class Run(sec: Double, gcSec: Double, jobs: Long,
@@ -72,9 +74,9 @@ object Measure {
     val error = try { body; None } catch { case NonFatal(e) => Some(e) }
     val sec = (System.nanoTime() - t0) / 1e9
     val gcSec = (gcMillis - g0) / 1e3
-    // the listener bus delivers asynchronously, and a job's end event
-    // follows its stages' events: wait (bounded: the bus may drop
-    // events) for the ends of this run's jobs before reading counters
+    // a job's end event follows its stages' events: wait (bounded: the
+    // bus may drop events) for the ends of the jobs whose start has been
+    // delivered; a job whose start is still queued is not waited for
     val until = System.nanoTime() + 1000000000L
     while (!jobStartNs.isEmpty && System.nanoTime() < until)
       Thread.sleep(1)

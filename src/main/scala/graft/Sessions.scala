@@ -21,30 +21,22 @@ object Sessions {
       // events.ts is parquet TIMESTAMP(NANOS), which Spark cannot read
       // natively; read it as nanos-since-epoch long (Tables.t)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      // StaticSQLConf (first session of the JVM only): the whole-stage
-      // codegen class cache is an LRU of 100 entries by default; a
-      // 400+-query catalog cycles it completely between a query's
-      // warmup and its timed run, so every timing silently paid janino
-      // recompilation (~0.1-0.5 s/plan; the r8 suite read 436 s vs
-      // 237 s on identical plans). Sized to hold the whole catalog.
+      // StaticSQLConf (first session of the JVM only): the codegen
+      // class cache is a 100-entry LRU by default, which a 400+-query
+      // catalog cycles between a query's warmup and its timed run, so
+      // every timing paid janino recompilation (the r8 suite read
+      // 436 s vs 237 s on identical plans). Sized to hold the catalog.
       "spark.sql.codegen.cache.maxEntries" -> "4096",
-      // AQE renders the FULL plan string for every SQLExecutionStart /
-      // AdaptiveExecutionUpdate listener event even with the UI off; on
-      // deeply nested cached plans (graph_kcore's 4 peel rounds) that
-      // string is ~1 MB and its render was ~0.8 s of every warm run,
-      // measured by main-thread stack sampling (graph_kcore 2.5-2.9 s
-      // -> 1.8 s). Results are untouched. A runtime conf: QBench lifts
-      // it in explain mode so plan dumps stay whole.
+      // AQE renders the FULL plan string for every listener event even
+      // with the UI off; on graph_kcore's nested cached plans that was
+      // ~1 MB and ~0.8 s of every warm run (2.5-2.9 s -> 1.8 s). A
+      // runtime conf: QBench lifts it in explain mode.
       "spark.sql.maxPlanStringLength" -> "32768",
-      // Let AQE coalesce shuffle partitions INSIDE cached-plan
-      // materialization too (off by default). The iterative operators
-      // cache every round (peel/CC/LPA/candidate tables), and with the
-      // default every exchange under a cache materializes at the static
-      // shuffle partition count regardless of data volume: 137-329
-      // tasks per mid-tier graph query moving KBs (QBench:
-      // graph_2hop_reach 260 -> 12 tasks, warm 1.57 -> 0.42 s;
-      // graph_louvain_round 329 -> 19, 2.21 -> 1.01 s). Result-invariant
-      // by the full oracle re-verify at sf0.01 and sf0.001.
+      // let AQE coalesce shuffle partitions inside cached-plan
+      // materialization too: the iterative operators cache every round,
+      // and each exchange under a cache otherwise runs at the static
+      // partition count (graph_2hop_reach 260 -> 12 tasks, warm 1.57 ->
+      // 0.42 s). Result-invariant by the oracle at sf0.01 and sf0.001.
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
     val spark = settings.foldLeft(SparkSession.builder().appName(appName)) {
       case (b, (k, v)) => b.config(k, sys.props.getOrElse(k, v))

@@ -90,16 +90,29 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   /** The live manifest's text, without writing: CURRENT.next if present
     * (complete, maybe not yet promoted), else CURRENT. A promote can
-    * rename the file away between the probes; a second round finds it.
+    * remove the file under a reader (or, on a checksummed file system,
+    * pair its old data with the new checksum); the probes then repeat.
+    * None only when no manifest file was ever seen (never committed).
     */
   private def readManifest(): Option[String] = {
-    def read(p: Path) = try {
+    var seen = false
+    def read(p: Path): Option[String] = try {
       val in = fs.open(p)
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-    Iterator(nextPath, currentPath, nextPath, currentPath).map(read)
-      .collectFirst { case Some(txt) => txt }
+    } catch {
+      case _: java.io.FileNotFoundException => None
+      case _: org.apache.hadoop.fs.ChecksumException => seen = true; None
+    }
+    for (round <- 1 to 20) {
+      val txt = read(nextPath).orElse(read(currentPath))
+      if (txt.isDefined) return txt
+      seen ||= fs.exists(nextPath) || fs.exists(currentPath)
+      if (!seen) return None
+      Thread.sleep(round)
+    }
+    throw new IllegalStateException(
+      s"table at $path: the manifest vanished under every read")
   }
 
   /** Current live manifest: bucket-number -> relative dir.

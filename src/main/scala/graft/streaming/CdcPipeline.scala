@@ -122,13 +122,13 @@ object CdcPipeline {
   }
 
   /** Enforce the per-pipeline transform deadline (XmlConfig.java:
-    * 139-144, YdbService.java:160-173): run `body` on the calling
-    * thread under its own Spark job tag; at the deadline the watchdog
-    * cancels the tagged jobs, and once `body` has returned or thrown a
-    * TimeoutException surfaces — which the caller's `withRetry` treats
-    * like any other transient failure, matching the reference's
-    * timeout->retry semantics. The body never outlives the call, so a
-    * retry never overlaps the timed-out attempt on a single-writer sink.
+    * 139-144, YdbService.java:160-173): `body` runs on the calling
+    * thread under its own job tag, and at the deadline the watchdog
+    * cancels the tagged jobs. A body that then fails surfaces as a
+    * TimeoutException, which `withRetry` retries like any transient
+    * failure (the reference's timeout->retry); one that still returns
+    * has committed, so its value is returned. The body never outlives
+    * the call, so a retry never overlaps it on a single-writer sink.
     */
   private[graft] def withTimeout[T](spark: SparkSession, p: Pipeline)
       (body: => T): T = {
@@ -151,14 +151,13 @@ object CdcPipeline {
       sc.removeJobTag(tag)
       sc.setLocalProperty(interrupt, prevInterrupt)
     }
-    if (expired.get) {
-      val e = new java.util.concurrent.TimeoutException(
-        s"${p.consumer}: batch transform exceeded " +
-          s"${p.timeoutSeconds}s (timeoutSeconds)")
-      result.failed.foreach(e.initCause)
-      throw e
+    result match {
+      case scala.util.Failure(cause) if expired.get =>
+        throw new java.util.concurrent.TimeoutException(
+          s"${p.consumer}: batch transform exceeded " +
+            s"${p.timeoutSeconds}s (timeoutSeconds)").initCause(cause)
+      case r => r.get
     }
-    result.get
   }
 
   /** One process-wide daemon thread fires every batch deadline. */

@@ -194,14 +194,16 @@ class ConfigSpec extends AnyFunSuite {
     import graft.streaming.CdcPipeline
     val p = pipelineStub(timeoutSeconds = 1)
     val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // no Spark job to cancel: the body outlives the deadline
-    assertThrows[java.util.concurrent.TimeoutException] {
-      CdcPipeline.withTimeout(spark, p) {
-        Thread.sleep(2500)
-        finished.set(true)
-      }
+    // no Spark job to cancel: the body outlives the deadline and
+    // completes its (already committed) work, so its value comes back
+    // instead of a timeout that would make withRetry redo it
+    val r = CdcPipeline.withTimeout(spark, p) {
+      Thread.sleep(2500)
+      finished.set(true)
+      42
     }
     assert(finished.get(), "withTimeout returned while the body still ran")
+    assert(r === 42)
   }
 
   test("threadsCount sizes the batch's shuffle partitions and is " +
