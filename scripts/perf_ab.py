@@ -10,10 +10,12 @@ checkout ($TMPDIR), then for every seed and workload runs
 (base) and once in this checkout's working tree (change), alternating
 which side runs first. For each workload and end-to-end metric of
 BENCHMARK.json it prints both medians, each side's quartile spread
-((Q3 - Q1) / median), how much worse the change is (negative = better)
-and the metric's bound; a metric whose spread on either side is wider
-than its bound is marked "unresolved". It also prints the correct,
-attempted and failed operation counts of both sides.
+((Q3 - Q1) / median), in how many seed pairs the change read better
+than the base (ties count for neither side), how much worse the change
+is (negative = better) and the metric's bound. A metric whose spread on
+either side is wider than its bound is marked "unresolved", unless
+every change run reads better than every base run. It also prints the
+correct, attempted and failed operation counts of both sides.
 
 Exits non-zero when a metric is worse than its bound, a run is not
 correct or did not finish, or the change failed more operations than
@@ -111,10 +113,14 @@ def main():
     for w in workloads:
         print(f"\n== {w}: {len(seeds)} seeds, base {a.base} vs working tree")
         print(f"{'metric':<20} {'base':>12} {'change':>12} {'spread b/c':>13}"
-              f" {'worse by':>9} {'bound':>6}  verdict")
+              f" {'better in':>9} {'worse by':>9} {'bound':>6}  verdict")
         for m in bench["end_to_end"]:
-            vals = {s: [r["metrics"][m["name"]]["value"]
-                        for r in runs[s][w] if r and m["name"] in r["metrics"]]
+            def value(r):
+                return r["metrics"][m["name"]]["value"] \
+                    if r and m["name"] in r["metrics"] else None
+            def better(x, y):
+                return x < y if m["better"] == "lower" else x > y
+            vals = {s: [v for v in map(value, runs[s][w]) if v is not None]
                     for s in trees}
             if not vals["base"] or not vals["change"]:
                 print(f"{m['name']:<20} missing")
@@ -124,12 +130,21 @@ def main():
             worse = ((c - b) if m["better"] == "lower" else (b - c)) / b \
                 if b else 0.0
             sb, sc = spread(vals["base"]), spread(vals["change"])
+            # a pair is one seed's base and change run; a pair missing
+            # either side counts for neither
+            pairs = [(value(rb), value(rc))
+                     for rb, rc in zip(runs["base"][w], runs["change"][w])]
+            pairs = [(x, y) for x, y in pairs if x is not None and y is not None]
+            wins = sum(1 for x, y in pairs if better(y, x))
+            separated = all(better(x, y)
+                            for x in vals["change"] for y in vals["base"])
             verdict = ("WORSE" if worse > m["bound"] else
-                       "unresolved" if max(sb, sc) > m["bound"] else "ok")
+                       "unresolved" if max(sb, sc) > m["bound"]
+                       and not separated else "ok")
             bad |= verdict == "WORSE"
             print(f"{m['name']:<20} {b:>12.4g} {c:>12.4g} "
-                  f"{sb:>6.3f}/{sc:<6.3f} {worse:>+9.1%} {m['bound']:>6.0%}"
-                  f"  {verdict}")
+                  f"{sb:>6.3f}/{sc:<6.3f} {f'{wins}/{len(pairs)}':>9}"
+                  f" {worse:>+9.1%} {m['bound']:>6.0%}  {verdict}")
         counts = {}
         for s in trees:
             rs = runs[s][w]

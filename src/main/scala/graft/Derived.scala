@@ -101,11 +101,6 @@ object Derived {
     } catch { case _: java.io.IOException => 0L }
   }
 
-  /** True iff `key` has already been materialized in this JVM — lets
-    * harnesses label a measurement cold (paid the build) vs warm.
-    */
-  def isBuilt(key: String): Boolean = built.containsKey(key)
-
   /** Serve `key` from its parquet materialization, building (and
     * writing) it on first use. The build runs at most once per JVM;
     * concurrent first callers block on the same compute.

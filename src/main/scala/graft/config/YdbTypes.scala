@@ -71,18 +71,4 @@ object YdbTypes {
         throw new UnsupportedYdbType(ydb.trim) // unknown = unsupported
     }
   }
-
-  /** Build a Spark schema from declared `name: Type` member pairs
-    * (the `List<Struct<...>>` declaration). Throws on unsupported
-    * types; returns the schema plus the Yson-typed column names whose
-    * values must be rewritten to `"{}"`.
-    */
-  def schemaOf(members: Seq[(String, String)]): (StructType, Seq[String]) = {
-    val fields = members.map { case (n, t) =>
-      StructField(n, toSpark(t), nullable = true)
-    }
-    (StructType(fields), members.collect {
-      case (n, t) if isYson(t) => n
-    })
-  }
 }

@@ -29,8 +29,6 @@ object CdcParse {
       s"pk ${pk.mkString(",")} not subset of columns")
     def nonKey: Seq[StructField] =
       columns.fields.toSeq.filterNot(f => pk.contains(f.name))
-    def keyFields: Seq[StructField] =
-      pk.map(n => columns.fields(columns.fieldIndex(n)))
   }
 
   val OpUpdate = "update"
@@ -82,6 +80,16 @@ object CdcParse {
       .otherwise(OpDrop)
   }
 
+  /** from_json target for the fast path: payload objects as
+    * string-string maps (non-string scalars and nested JSON surface as
+    * their raw text, matching get_json_object's output).
+    */
+  private val fastSchema = StructType(Seq(
+    StructField("key", ArrayType(StringType)),
+    StructField("update", MapType(StringType, StringType)),
+    StructField("newImage", MapType(StringType, StringType)),
+    StructField("erase", MapType(StringType, StringType))))
+
   /** Parse a DataFrame carrying a raw-JSON envelope column into typed
     * rows: adds `op` plus one column per table column (PK columns from
     * the positional key array, others from the routed payload; null for
@@ -96,16 +104,6 @@ object CdcParse {
     * GetStructField reads. Remaining parses per row: 4 envelope + one
     * small payload parse per non-key column.
     */
-  /** from_json target for the fast path: payload objects as
-    * string-string maps (non-string scalars and nested JSON surface as
-    * their raw text, matching get_json_object's output).
-    */
-  private val fastSchema = StructType(Seq(
-    StructField("key", ArrayType(StringType)),
-    StructField("update", MapType(StringType, StringType)),
-    StructField("newImage", MapType(StringType, StringType)),
-    StructField("erase", MapType(StringType, StringType))))
-
   def parseEnvelope(df: DataFrame, envCol: String,
       schema: CdcSchema): DataFrame = {
     val env = col(envCol)

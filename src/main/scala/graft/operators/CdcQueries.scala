@@ -211,7 +211,7 @@ object CdcQueries {
       Seq("user_id"), "event_id").cache()
 
   def applyUpsert(spark: SparkSession, dir: String): DataFrame =
-    KeyedMerge.applyCdc(state0(spark, dir), oddLww(spark, dir),
+    KeyedMerge.applyUpsert(state0(spark, dir), oddLww(spark, dir),
       Seq("user_id")).orderBy("user_id")
 
   def applyInsert(spark: SparkSession, dir: String): DataFrame =
@@ -356,7 +356,7 @@ object CdcQueries {
       .filter(col("event_id") <= col("cut")
         && col("op") =!= CdcParse.OpDrop)
       .drop("cut")
-    KeyedMerge.applyCdc(state0(spark, dir),
+    KeyedMerge.applyUpsert(state0(spark, dir),
       KeyedMerge.lww(deltas, Seq("user_id"), "event_id"),
       Seq("user_id")).orderBy("user_id")
   }

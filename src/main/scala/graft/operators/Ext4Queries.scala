@@ -171,8 +171,7 @@ object Ext4Queries {
     * provided it falls inside a 10-minute lookback. The carry-forward
     * is an IGNORE NULLS last_value window — one per-key window pass,
     * no range join, no per-click probe: the scale shape for stream
-    * attribution (and the batch twin of a stream-stream interval
-    * join, which StreamingSimJoinSpec exercises with watermarks).
+    * attribution.
     */
   def clickAttrib(spark: SparkSession, dir: String): DataFrame = {
     registerAll(spark, dir)

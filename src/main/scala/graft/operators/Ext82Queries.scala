@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *  - `tok_wordpiece_score`: the WordPiece merge criterion (likelihood
   *    gain ln(c_ab·N/(c_a·c_b))) ranked against BPE's raw-count rank —
   *    the two classic subword-merge objectives side by side.
-  *  - `ev_inactivity_alarms`: batch twin of the StreamingInactivity
-  *    module — inactivity (absence-of-events) alarms under the exact
-  *    final-watermark closure rule the stream implements.
+  *  - `ev_inactivity_alarms`: inactivity (absence-of-events) alarms
+  *    under the final-watermark closure rule a streaming run over the
+  *    same corpus reaches.
   */
 object Ext82Queries {
 
@@ -268,14 +268,12 @@ object Ext82Queries {
   // ev_inactivity_alarms
   // ---------------------------------------------------------------
 
-  /** Batch twin of the StreamingInactivity module (the 20th streaming
-    * module): inactivity alarms — one row per activity run that went
-    * quiet for > 24h of event time, carrying the run's last event and
-    * length, suppressed when the run ended in the terminal 'purchase'.
-    * The finalization watermark is replicated exactly: an alarm exists
-    * only if last_ms + gap ≤ max(ms) − delay, the final watermark an
-    * AvailableNow run of the stream reaches on the same corpus —
-    * StreamingInactivitySpec proves stream == this twin row for row.
+  /** Inactivity alarms: one row per activity run that went quiet for
+    * > 24h of event time, carrying the run's last event and length,
+    * suppressed when the run ended in the terminal 'purchase'. The
+    * finalization watermark is the one an AvailableNow stream reaches
+    * on the same corpus: an alarm exists only if
+    * last_ms + gap ≤ max(ms) − delay.
     *
     * 100 TB shape: one per-user window pass (the shuffle any
     * sessionization pays) + a |runs|-bounded aggregate; the 1-row

@@ -292,9 +292,8 @@ object Ext85Queries {
   // ev_dynamic_rules
   // ---------------------------------------------------------------
 
-  /** Batch twin of [[graft.streaming.StreamingDynamicRules]]: alerts
-    * under dynamic per-key thresholds. The control channel is every
-    * event with event_id % 10 == 0 (its vm becomes the key's new
+  /** Alerts under dynamic per-key thresholds. The control channel is
+    * every event with event_id % 10 == 0 (its vm becomes the key's new
     * threshold at seq = event_id); the data channel is everything
     * else; a data row alerts iff it exceeds the LATEST rule at or
     * before its seq — a textbook backward as-of join

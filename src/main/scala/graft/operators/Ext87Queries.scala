@@ -398,14 +398,10 @@ object Ext87Queries {
   // ev_wm_coalesce
   // ---------------------------------------------------------------
 
-  /** Batch twin of
-    * [[graft.streaming.StreamingWatermarkCoalesce]]: one consolidated
-    * row per (key, hourly epoch with activity), carrying the key's
-    * CUMULATIVE count/sum at that epoch's close — the output a
-    * watermark-coalescing sink sees instead of per-event rows. A
-    * keyed per-epoch aggregate plus one running-sum window; the
-    * streaming spec proves the timer-driven stream emits exactly
-    * these rows for every epoch the final watermark closes.
+  /** One consolidated row per (key, hourly epoch with activity),
+    * carrying the key's CUMULATIVE count/sum at that epoch's close —
+    * the output a watermark-coalescing sink sees instead of per-event
+    * rows. A keyed per-epoch aggregate plus one running-sum window.
     *
     * 100 TB shape: one keyed shuffle collapses the event log to
     * |key, active-epoch| before the window; the window partitions by

@@ -82,11 +82,6 @@ object KeyedMerge {
       keys: Seq[String]): DataFrame =
     state.join(deletes.select(keys.map(col): _*), keys, "left_anti")
 
-  /** Full CDC apply: LWW'd batch with mixed update/erase ops. */
-  def applyCdc(state: DataFrame, batch: DataFrame,
-      keys: Seq[String]): DataFrame =
-    applyUpsert(state, batch, keys) // erase rows drop state, add nothing
-
   /** SQL MERGE with a CONDITIONAL matched-update clause — the full
     * merge statement the write-action quartet (upsert / insert /
     * updateOn / delete) composes into one keyed pass:

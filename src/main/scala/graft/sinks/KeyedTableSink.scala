@@ -291,22 +291,28 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   }
 
   /** Apply one LWW'd batch (typed rows + `op` column) with the given
-    * write action (CdcMsgParser.java:225-248 dispatch).
+    * write action (CdcMsgParser.java:225-248 dispatch). Both caches
+    * are released on every exit: after a failure past the promote, the
+    * retry reads new generation dirs, so it would never match, or
+    * free, a state cache left behind.
     */
   def apply(batch: DataFrame, action: String): Unit = {
     val cached = batch.cache()
-    val touched = cached.select(bucketOf.as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.nonEmpty) {
-      val m = manifest()
-      // materialize before the swap invalidates the files. Kept: on
-      // cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50 ~14% but
-      // raised heap_live_mb 13%, past the benchmark's 10% bound
-      val state = readDirs(touched.flatMap(b => m.get(b.toString))).cache()
-      state.count()
-      swapBuckets(m, merge(state, cached, action), touched)
-      state.unpersist()
-    }
-    cached.unpersist()
+    try {
+      val touched = cached.select(bucketOf.as("__b"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      if (touched.nonEmpty) {
+        val m = manifest()
+        // materialize before the swap invalidates the files. Kept: on
+        // cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50 ~14% but
+        // raised heap_live_mb 13%, past the benchmark's 10% bound
+        val state =
+          readDirs(touched.flatMap(b => m.get(b.toString))).cache()
+        try {
+          state.count()
+          swapBuckets(m, merge(state, cached, action), touched)
+        } finally state.unpersist()
+      }
+    } finally cached.unpersist()
   }
 }

@@ -4,17 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** CDC changelog source (SURVEY.md §2 O1).
-  *
-  * The reference consumes a YDB topic (CdcReader.java:40-53): a
-  * partitioned, ordered-within-partition log of JSON envelopes. Here
-  * the same contract is a Structured Streaming file source over JSON
-  * lines — each line one envelope, file order = offset order — with
-  * `maxFilesPerTrigger` standing in for the reader's 200 MB admission
-  * cap (CdcReader.java:43). A `topic://` changelog is read through
-  * [[TopicSourceProvider]] (the spark-sql-kafka row contract) and
-  * [[fromKafkaShaped]]; everything downstream is unchanged.
-  */
 /** CLI: render events.parquet -> CDC changelog JSON lines.
   * Usage: runMain graft.sources.ChangelogGen <eventsParquet> <outDir> [numFiles]
   */
@@ -28,6 +17,17 @@ object ChangelogGen {
   }
 }
 
+/** CDC changelog source (SURVEY.md §2 O1).
+  *
+  * The reference consumes a YDB topic (CdcReader.java:40-53): a
+  * partitioned, ordered-within-partition log of JSON envelopes. Here
+  * the same contract is a Structured Streaming file source over JSON
+  * lines — each line one envelope, file order = offset order — with
+  * `maxFilesPerTrigger` standing in for the reader's 200 MB admission
+  * cap (CdcReader.java:43). A `topic://` changelog is read through
+  * [[TopicSourceProvider]] (the spark-sql-kafka row contract) and
+  * [[fromKafkaShaped]]; everything downstream is unchanged.
+  */
 object Changelog {
 
   val rawSchema: StructType =
@@ -97,12 +97,6 @@ object Changelog {
       .option("maxBytesPerTrigger", maxBytesPerTrigger.toString)
       .load())
 
-  /** Deterministically render the driver `events` table into CDC
-    * envelope JSON lines (same mix as CdcQueries: erase / keys-only /
-    * newImage-fallback / drop / update by event_id % 10), written as
-    * `numFiles` ordered files so the stream replays multiple
-    * micro-batches. Returns the number of envelopes written.
-    */
   /** Render the driver `events` table into (user_id, envelope) pairs
     * in event order — shared by the file replay writer and the topic
     * publisher so both sources carry IDENTICAL envelopes.
@@ -130,6 +124,12 @@ object Changelog {
     }
   }
 
+  /** Deterministically render the `events` table into CDC
+    * envelope JSON lines (same mix as CdcQueries: erase / keys-only /
+    * newImage-fallback / drop / update by event_id % 10), written as
+    * `numFiles` ordered files so the stream replays multiple
+    * micro-batches. Returns the number of envelopes written.
+    */
   def writeFromEvents(spark: SparkSession, eventsParquet: String,
       outDir: String, numFiles: Int = 5): Long = {
     import java.nio.file.{Files, Paths}

@@ -9,9 +9,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Bootstrap-then-tail onboarding (19th streaming module; round-8
-  * verdict ask #5): snapshot-load the sink, then attach the changefeed
-  * at the recorded cutoff —
+/** Bootstrap-then-tail onboarding: snapshot-load the sink, then
+  * attach the changefeed at the recorded cutoff —
   *
   *  - stream==batch: the two-phase state converges to the ONE-PHASE
   *    LWW over the whole log (the same algebra `cdc_bootstrap_tail`

@@ -203,6 +203,21 @@ class BucketedSinkSpec extends AnyFunSuite {
     assert(rows(sink) === Set())
   }
 
+  test("a failed apply releases the batch and state caches") {
+    val dir = Files.createTempDirectory("buk6").toString
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
+      numBuckets = 4)
+    sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // an unknown action fails inside merge, after both caches exist
+    intercept[IllegalArgumentException] {
+      sink.apply(batch((1L, 11L, CdcParse.OpUpdate)), "noSuchAction")
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still persisted: $leaked")
+    assert(rows(sink) === Set((1L, 10L)))
+  }
+
   test("startupGc removes a crashed writer's orphans, keeps live state") {
     val dir = Files.createTempDirectory("buk4").toString
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,

@@ -101,7 +101,7 @@ class Ext2OperatorsSpec extends AnyFunSuite {
     assert(ops === Map(2L -> "update", 3L -> "erase", 4L -> "update"))
     // unchanged key 1 emits nothing; erase carries null payload
     assert(diff.filter($"id" === 3L).select("t").head().isNullAt(0))
-    val rebuilt = KeyedMerge.applyCdc(before, diff, Seq("id"))
+    val rebuilt = KeyedMerge.applyUpsert(before, diff, Seq("id"))
       .select("id", "t", "v").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(rebuilt === after.collect()
@@ -124,7 +124,7 @@ class Ext2OperatorsSpec extends AnyFunSuite {
       val before = snap()
       val after = snap()
       val diff = KeyedMerge.diffChangelog(before, after, Seq("id"))
-      val rebuilt = KeyedMerge.applyCdc(before, diff, Seq("id"))
+      val rebuilt = KeyedMerge.applyUpsert(before, diff, Seq("id"))
         .collect().map(r => (r.getLong(0), r.getString(1),
           r.getLong(2))).toSet
       val want = after.collect().map(r => (r.getLong(0), r.getString(1),

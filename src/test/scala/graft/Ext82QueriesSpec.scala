@@ -191,4 +191,27 @@ class Ext82QueriesSpec extends AnyFunSuite {
     // else the query demonstrates nothing
     assert(got.exists(r => r._6 !== r._7))
   }
+
+  test("inactivity alarms: terminal runs suppressed; both closure " +
+      "paths occur") {
+    val ev = Tables.t(spark, TestSpark.sfDir, "events")
+      .select(col("user_id"), expr("ts div 1000000").as("ms"),
+        (col("event_type") === "purchase").as("terminal"))
+    val got = Ext82Queries.inactivityAlarms(spark, TestSpark.sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.nonEmpty)
+    // a run closed by a later event of the same user, and a run closed
+    // only by the final watermark (the user's last event) — else the
+    // fixture proves half the closure rule
+    val lastByUser = ev.groupBy("user_id").agg(max("ms")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.exists { case (u, ms) => lastByUser(u) == ms },
+      "no watermark-closed (trailing) alarm in the fixture")
+    assert(got.exists { case (u, ms) => lastByUser(u) != ms },
+      "no successor-closed alarm in the fixture")
+    // no alarm's last event is a purchase
+    val terminal = ev.filter(col("terminal")).select("user_id", "ms")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(!got.exists(terminal))
+  }
 }

@@ -98,7 +98,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     batches.foreach { b =>
       agg = KeyedMerge.applyAggDelta(agg, st, b, Seq("id"), "name", "v")
         .localCheckpoint() // pin: st mutates beneath the lazy plan
-      st = KeyedMerge.applyCdc(st, b, Seq("id")).localCheckpoint()
+      st = KeyedMerge.applyUpsert(st, b, Seq("id")).localCheckpoint()
     }
     val got = agg.collect()
       .map(r => (r.getAs[String]("name"), r.getAs[Long]("n"),
@@ -122,7 +122,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getAs[String]("name"), r.getAs[Long]("n"),
         if (r.isNullAt(2)) null else r.getLong(2))).toSet
-    val want = rows(agg(KeyedMerge.applyCdc(state, batch, Seq("id"))))
+    val want = rows(agg(KeyedMerge.applyUpsert(state, batch, Seq("id"))))
 
     val firstPass = KeyedMerge.applyAggDelta(agg(state), state, batch,
       Seq("id"), "name", "v")
@@ -155,7 +155,7 @@ class KeyedMergeSpec extends AnyFunSuite {
 
     // a crash AFTER both writes also replays clean: deltas against
     // the post-apply state net to zero even without the guard
-    val postState = KeyedMerge.applyCdc(state, batch, Seq("id"))
+    val postState = KeyedMerge.applyUpsert(state, batch, Seq("id"))
     assert(rows(KeyedMerge.applyAggDelta(firstPass, postState, batch,
       Seq("id"), "name", "v")) === want)
   }
@@ -188,7 +188,7 @@ class KeyedMergeSpec extends AnyFunSuite {
         }.toDF("id", "name", "v", "op", "seq")
         a = KeyedMerge.applyAggDelta(a, st, batch, Seq("id"), "name", "v")
           .localCheckpoint()
-        st = KeyedMerge.applyCdc(st, batch, Seq("id")).localCheckpoint()
+        st = KeyedMerge.applyUpsert(st, batch, Seq("id")).localCheckpoint()
         assert(rows(a) === rows(agg(st)),
           s"trial $trial diverged from recompute")
       }

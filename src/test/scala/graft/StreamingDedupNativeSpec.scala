@@ -6,10 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Native `dropDuplicatesWithinWatermark` (the Spark 3.5+ streaming
-  * dedup API) alongside the custom `StreamingDedup` processor: a
-  * replayed copy of the whole stream arriving within the watermark
-  * delay must be fully suppressed, and the surviving rows are exactly
-  * the batch distinct. Two AvailableNow runs share one checkpoint so
+  * dedup API): a replayed copy of the whole stream arriving within the
+  * watermark delay must be fully suppressed, and the surviving rows
+  * are exactly the batch distinct. Two AvailableNow runs share one checkpoint so
   * the duplicate batch is guaranteed to arrive second — state from
   * phase 1 must survive the restart for phase 2's suppression (the
   * at-least-once redelivery contract, reference YqlWriter.java
