@@ -158,13 +158,14 @@ object DataQuality {
         .as("split_day")))
     val withW = ev.crossJoin(dayB)
       .withColumn("is_ref", col("day") < col("split_day"))
-    // numeric feature: bins fixed on the reference window
-    val vb = broadcast(withW.filter(col("is_ref"))
-      .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax")))
+    // numeric feature: bins fixed on the reference window (hinted at the
+    // cross join only: the spine below is a left join's left side)
+    val vb = withW.filter(col("is_ref"))
+      .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
     // vmax == vmin (constant reference window) would divide by zero:
     // NaN/Infinity crashes the ANSI int cast and diverges from the
     // oracle — collapse that case to bucket 0
-    val bucketed = withW.crossJoin(vb)
+    val bucketed = withW.crossJoin(broadcast(vb))
       .filter(col("value").isNotNull)
       .withColumn("bucket", when(col("vmax") === col("vmin"), lit(0))
         .otherwise(least(greatest(
@@ -331,9 +332,9 @@ object DataQuality {
         .as("split_day")))
     val withRef = ev.crossJoin(sp)
       .withColumn("is_ref", col("day") < col("split_day"))
-    val vb = broadcast(withRef.filter(col("is_ref"))
-      .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax")))
-    val bucketed = withRef.crossJoin(vb)
+    val vb = withRef.filter(col("is_ref"))
+      .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
+    val bucketed = withRef.crossJoin(broadcast(vb))
       .filter(col("value").isNotNull)
       .withColumn("bucket", StreamingDrift.bucketOf(col("value"),
         col("vmin"), col("vmax"), 10))

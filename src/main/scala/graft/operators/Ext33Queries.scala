@@ -87,14 +87,15 @@ object Ext33Queries {
       .groupBy("node").agg(count(lit(1)).as("deg"))
       .cache()
     val ks = Seq(1L, 2L, 4L, 8L, 16L)
-    val spine = broadcast(spark.range(1)
-      .select(explode(array(ks.map(lit): _*)).as("k")))
-    val nodesK = deg.crossJoin(spine).filter(col("deg") > col("k"))
+    // hinted at the cross joins only: it is also a left join's left side
+    val spine = spark.range(1)
+      .select(explode(array(ks.map(lit): _*)).as("k"))
+    val nodesK = deg.crossJoin(broadcast(spine)).filter(col("deg") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_rich"))
     val edgesK = pairs
       .join(deg.select(col("node").as("sa"), col("deg").as("da")), "sa")
       .join(deg.select(col("node").as("sb"), col("deg").as("db")), "sb")
-      .crossJoin(spine)
+      .crossJoin(broadcast(spine))
       .filter(col("da") > col("k") && col("db") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("e_rich"))
     // spine-anchored so an EMPTY club still reports its row (the

@@ -341,15 +341,16 @@ object Ext9Queries {
 
   /** The PCA oracle replays the identical integer lattice: HUGEINT
     * sums (exact, order-free), the same sign-split // divisions, one
-    * unrolled CTE pair per power step.
+    * unrolled CTE pair per power step. MATERIALIZED: DuckDB 1.0 inlines
+    * CTEs, copying the `mm ⋈ mm` subtree exponentially often (OOM).
     */
   private def pcaIterCte(k: Int): String =
-    s"""w$k AS (
+    s"""w$k AS MATERIALIZED (
        |  SELECT cs.i AS j, SUM(cs.cs * v${k - 1}.v) AS w
        |  FROM cs JOIN v${k - 1} ON v${k - 1}.j = cs.j GROUP BY cs.i
-       |), m$k AS (
+       |), m$k AS MATERIALIZED (
        |  SELECT MAX(ABS(w)) AS mx FROM w$k
-       |), v$k AS (
+       |), v$k AS MATERIALIZED (
        |  SELECT w$k.j,
        |    CASE WHEN m$k.mx = 0 THEN vp.v
        |         WHEN w < 0 THEN -(((-w) * 1000000) // m$k.mx)
@@ -361,29 +362,29 @@ object Ext9Queries {
     * oracles build on.
     */
   private def pcaFitSql: String =
-    s"""WITH mm AS (
+    s"""WITH mm AS MATERIALIZED (
         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
         |    CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000000)
         |      AS BIGINT) AS m
         |  FROM embeddings WHERE embedding IS NOT NULL
-        |), nn AS (
+        |), nn AS MATERIALIZED (
         |  SELECT COUNT(*) AS n FROM embeddings
         |  WHERE embedding IS NOT NULL
-        |), s AS (
+        |), s AS MATERIALIZED (
         |  SELECT i, SUM(m) AS s FROM mm GROUP BY i
-        |), p AS (
+        |), p AS MATERIALIZED (
         |  SELECT a.i AS i, b.i AS j, SUM(a.m * b.m) AS p
         |  FROM mm a JOIN mm b ON a.vec_id = b.vec_id
         |  GROUP BY a.i, b.i
-        |), c AS (
+        |), c AS MATERIALIZED (
         |  SELECT p.i, p.j, nn.n * p.p - sa.s * sb.s AS c
         |  FROM p CROSS JOIN nn
         |  JOIN s sa ON sa.i = p.i JOIN s sb ON sb.i = p.j
-        |), cs AS (
+        |), cs AS MATERIALIZED (
         |  SELECT i, j, CASE WHEN c < 0 THEN -((-c) // 100000000)
         |    ELSE c // 100000000 END AS cs
         |  FROM c
-        |), v0 AS (
+        |), v0 AS MATERIALIZED (
         |  SELECT i AS j, CAST(1000000 AS HUGEINT) AS v FROM s
         |), """.stripMargin +
       (1 to PcaIters).map(pcaIterCte).mkString(",\n")

@@ -5,39 +5,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
+import scala.util.{Failure, Try}
 
 /** Parquet-backed keyed table with MERGE-style apply (SURVEY.md §7.3):
   * plain Spark has no MERGE INTO over parquet, so state is rewritten as
   * `state ⟕̸ batchKeys ∪ upserts` into fresh generation directories and
-  * made visible through a CRASH-ATOMIC manifest swap. Apply is
+  * made visible by a CRASH-ATOMIC manifest commit. Apply is
   * idempotent by construction, which makes Structured Streaming's
   * replay-after-failure satisfy the reference's at-least-once +
   * deferred-commit contract (YqlWriter.java:181-206).
   *
-  * Commit protocol (no rename-chain windows): data is fully written to
-  * new `g-<uuid>` generation dirs first, then a manifest listing every
-  * live dir is promoted:
-  *
-  *   1. write manifest text to `CURRENT.tmp-<uuid>`
-  *   2. rename -> `CURRENT.next`  (atomic appear; existence implies
-  *      the manifest AND all dirs it references are complete)
-  *   3. delete `CURRENT`, rename `CURRENT.next` -> `CURRENT`
-  *
-  * A crash in any window rolls FORWARD: a present `CURRENT.next` is
-  * the live manifest (its data was durable before it appeared), and
-  * the next `apply`, `replace` or `startupGc` promotes it. There is
-  * never a moment with no recoverable state — the failure mode the old
-  * rename-swap had (crash between renames left no data dir, so a
-  * streaming replay would merge against empty state and silently lose
-  * the table). Unreferenced generation dirs and stale tmp manifests are
-  * garbage-collected after each promote.
+  * Commit protocol: write-once numbered manifests, as in Delta Lake's
+  * transaction log. Data is fully written to a new `g-<uuid>` dir;
+  * then the manifest listing every live dir is written to
+  * `manifest.tmp-<uuid>`, hsync'd, and renamed to `manifest-<n>` (one
+  * past the newest, zero-padded so name order is number order). That
+  * rename is the commit: a crash before it leaves the previous
+  * manifest live, and no manifest is ever rewritten.
   *
   * Reader contract: reads (`load`, `exists`, `lastEpoch`, `manifest`)
-  * never write. They parse `CURRENT.next` if it exists, else
-  * `CURRENT`, and retry when a concurrent promote renames the file away
-  * under them; only the writer promotes. Superseded generations are
-  * still gc'd right after each promote, so a read that listed them
-  * before the promote can fail (no retention yet).
+  * never write. They list the root and open the newest manifest; if
+  * gc removed it meanwhile (the reader stalled across two commits),
+  * they list again, a bounded number of times.
+  *
+  * Retention of one commit: `gc` (after each commit, and `startupGc`)
+  * keeps the two newest manifests and every generation they
+  * reference, and deletes older manifests, other `g-*` dirs and stale
+  * tmp files. So a `load()` resolved against the newest manifest can
+  * still be read after the next commit.
   *
   * Layout: the state is hash-partitioned on the key into `numBuckets`
   * (>= 1) per-bucket generation dirs; a batch touches only the buckets
@@ -60,8 +55,6 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     }), spark.sparkContext.hadoopConfiguration)
 
   private val root = new Path(path)
-  private val currentPath = new Path(root, "CURRENT")
-  private val nextPath = new Path(root, "CURRENT.next")
 
   // ---- manifest: lines of "<token>\t<relative-dir>"; token is the
   // bucket number, or a meta entry: "buckets" (the hash fan-out the
@@ -69,6 +62,12 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   private val MetaBuckets = "buckets"
   private val MetaEpoch = "epoch"
+  private val ManifestName = """manifest-(\d{20})""".r
+  private val TmpPrefix = "manifest.tmp-"
+  private val Retained = 2 // manifests gc keeps: newest + the one before
+  private val ReadAttempts = 5 // listings before a reader gives up
+
+  private def manifestPath(n: Long) = new Path(root, f"manifest-$n%020d")
 
   /** Manifest minus meta entries — the lines that point at data dirs. */
   private def dataEntries(m: Map[String, String]): Map[String, String] =
@@ -80,97 +79,82 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     */
   def lastEpoch: Option[Long] = manifest().get(MetaEpoch).map(_.toLong)
 
-  /** Promote (writer only): roll CURRENT.next onto CURRENT. CURRENT.next
-    * is only ever written AFTER its data dirs are complete, so it wins.
+  private def listRoot(): Seq[String] =
+    try fs.listStatus(root).map(_.getPath.getName).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** Committed manifest numbers in a root listing, ascending. A root
+    * with no numbered manifest but a `CURRENT` (or `CURRENT.next`) was
+    * written by the retired rename-over protocol: refused, so neither
+    * a read nor a writer's gc mistakes its data for an empty table.
     */
-  private def recover(): Unit = if (fs.exists(nextPath)) {
-    if (fs.exists(currentPath)) fs.delete(currentPath, false)
-    fs.rename(nextPath, currentPath)
+  private def committed(names: Seq[String]): Seq[Long] = {
+    val ns = names.collect { case ManifestName(n) => n.toLong }.sorted
+    if (ns.isEmpty) Seq("CURRENT.next", "CURRENT").find(names.contains)
+      .foreach { f =>
+        val dirs = dataEntries(read(new Path(root, f))).values.toSeq.sorted
+          .map(d => new Path(root, d))
+        throw new IllegalStateException(s"table at $path uses the " +
+          s"retired $f manifest format; migrate it: read its data dirs " +
+          s"${dirs.mkString(", ")} with spark.read.parquet and replace() " +
+          "that into a sink at a new path")
+      }
+    ns
   }
 
-  /** The live manifest's text, without writing: CURRENT.next if present
-    * (complete, maybe not yet promoted), else CURRENT. A promote can
-    * remove the file under a reader (or, on a checksummed file system,
-    * pair its old data with the new checksum); the probes then repeat.
-    * None only when no manifest file was ever seen (never committed).
-    */
-  private def readManifest(): Option[String] = {
-    var seen = false
-    def read(p: Path): Option[String] = try {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case _: org.apache.hadoop.fs.ChecksumException => seen = true; None
-    }
-    for (round <- 1 to 20) {
-      val txt = read(nextPath).orElse(read(currentPath))
-      if (txt.isDefined) return txt
-      seen ||= fs.exists(nextPath) || fs.exists(currentPath)
-      if (!seen) return None
-      Thread.sleep(round)
-    }
-    throw new IllegalStateException(
-      s"table at $path: the manifest vanished under every read")
+  private def read(p: Path): Map[String, String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).map { l =>
+        val Array(tok, dir) = l.split("\t", 2)
+        tok -> dir
+      }.toMap
+    finally in.close()
   }
+
+  /** The newest committed manifest (empty if none), without writing. */
+  @annotation.tailrec
+  private def readManifest(attempt: Int = 1): Map[String, String] =
+    committed(listRoot()).lastOption.map(n => Try(read(manifestPath(n)))) match {
+      case None => Map.empty
+      case Some(Failure(_: java.io.FileNotFoundException))
+          if attempt < ReadAttempts => readManifest(attempt + 1)
+      case Some(m) => m.get
+    }
 
   /** Current live manifest: bucket-number -> relative dir.
     * Public as an ops/inspection surface (which dirs are live).
     */
-  def manifest(): Map[String, String] = readManifest() match {
-    case None => Map.empty
-    case Some(txt) =>
-      val m = txt.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(tok, dir) = l.split("\t", 2)
-        tok -> dir
-      }.toMap
-      // refuse to mis-hash: a sink handle whose bucket fan-out differs
-      // from what the table was written with would route keys to the
-      // wrong generation dirs and silently drop/duplicate state; 0 is
-      // the retired whole-table ("flat") layout, which no handle opens
-      val recorded = m.get(MetaBuckets).map(_.toInt)
-        .getOrElse(if (m.contains("flat")) 0 else numBuckets)
-      if (recorded != numBuckets)
-        throw new IllegalStateException(s"table at $path " + (
-          if (recorded == 0) "uses the retired whole-table (flat) " +
-            "layout; migrate it: read its generation dir " +
-            s"${new Path(root, m("flat"))} with spark.read.parquet " +
-            "and replace() that into a new sink"
-          else s"was written with numBuckets=$recorded but this sink " +
-            s"was constructed with numBuckets=$numBuckets; open with " +
-            "the recorded count or run rebucket()"))
-      m
+  def manifest(): Map[String, String] = {
+    val m = readManifest()
+    // refuse to mis-hash: a sink handle whose bucket fan-out differs
+    // from what the table was written with would route keys to the
+    // wrong generation dirs and silently drop/duplicate state
+    val recorded = m.get(MetaBuckets).map(_.toInt).getOrElse(numBuckets)
+    if (recorded != numBuckets)
+      throw new IllegalStateException(s"table at $path was written with " +
+        s"numBuckets=$recorded but this sink was constructed with " +
+        s"numBuckets=$numBuckets; open with the recorded count or rebucket()")
+    m
   }
 
-  private def writeManifest(m0: Map[String, String]): Unit = {
-    // promote a crashed writer's CURRENT.next (m0 was read from it)
-    // so the rename below has a free target
-    recover()
-    val m = m0 + (MetaBuckets -> numBuckets.toString)
-    val tmp = new Path(root, s"CURRENT.tmp-${uuid()}")
-    val out = fs.create(tmp, true)
-    try {
-      out.write(m.toSeq.sortBy(_._1)
-        .map { case (t, d) => s"$t\t$d" }.mkString("\n").getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
-    fs.rename(tmp, nextPath) // atomic appear of a COMPLETE manifest
-    recover() // promote: delete CURRENT, CURRENT.next -> CURRENT
-  }
-
-  /** Delete generation dirs no longer referenced and stale tmp files.
-    * Safe because apply() is single-writer per pipeline (reference
-    * semantics) and state reads materialize before the swap.
+  /** Keep the `Retained` newest manifests and the generation dirs they
+    * reference; delete older manifests, other `g-*` dirs and stale tmp
+    * files. Safe because apply() is single-writer per pipeline
+    * (reference semantics), so no generation is in flight.
     */
-  private def gc(live: Map[String, String]): Unit = {
-    val referenced = dataEntries(live).values.map(_.split("/")(0)).toSet
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
+  private def gc(): Unit = {
+    val names = listRoot()
+    val ns = committed(names)
+    val (old, kept) = ns.splitAt(ns.size - Retained)
+    val referenced = kept.flatMap(n => dataEntries(read(manifestPath(n)))
+      .values.map(_.split("/")(0))).toSet
+    old.foreach(n => fs.delete(manifestPath(n), false))
+    names.foreach { n =>
       if (n.startsWith("g-") && !referenced.contains(n))
-        fs.delete(st.getPath, true)
-      else if (n.startsWith("CURRENT.tmp-"))
-        fs.delete(st.getPath, false)
+        fs.delete(new Path(root, n), true)
+      else if (n.startsWith(TmpPrefix))
+        fs.delete(new Path(root, n), false)
     }
   }
 
@@ -194,9 +178,12 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * generation (partitioned by bucket), then point their manifest
     * entries at the new dirs; entries of other buckets in `prev` carry
     * over. An emptied bucket (no rows survived) simply drops its entry.
+    * The commit is the rename of the synced manifest to number `n`.
     */
   private def swapBuckets(prev: Map[String, String], next: DataFrame,
       buckets: Seq[Int]): Unit = {
+    // listed before any write, so a retired-format root is refused first
+    val n = committed(listRoot()).lastOption.getOrElse(0L) + 1
     val gen = s"g-${uuid()}"
     val genPath = new Path(root, gen)
     next.withColumn("__bucket", bucketOf)
@@ -208,9 +195,17 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     val m = buckets.foldLeft(prev) { (acc, b) =>
       if (written.contains(b)) acc + (b.toString -> s"$gen/__bucket=$b")
       else acc - b.toString
-    }
-    writeManifest(m)
-    gc(m)
+    } + (MetaBuckets -> numBuckets.toString)
+    val tmp = new Path(root, TmpPrefix + uuid())
+    val out = fs.create(tmp, true)
+    try {
+      out.write(m.toSeq.sortBy(_._1)
+        .map { case (t, d) => s"$t\t$d" }.mkString("\n").getBytes("UTF-8"))
+      out.hsync()
+    } finally out.close()
+    if (!fs.rename(tmp, manifestPath(n)))
+      throw new java.io.IOException(s"commit of ${manifestPath(n)} failed")
+    gc()
   }
 
   private def merge(state: DataFrame, batch: DataFrame,
@@ -233,17 +228,14 @@ class KeyedTableSink(spark: SparkSession, val path: String,
       throw new IllegalArgumentException(s"unknown action: $other")
   }
 
-  /** Recover a mid-promote crash and delete orphaned generation dirs /
-    * stale tmp manifests a crashed writer left behind (data written but
-    * never referenced by a promoted manifest). Call at stream
-    * (re)start, when the pipeline owns the path exclusively — NOT
-    * while another writer is mid-apply on the same table, since its
-    * in-flight generation dirs are unreferenced by design.
+  /** Delete orphaned generation dirs / stale tmp manifests a crashed
+    * writer left behind (data written but never referenced by a
+    * committed manifest). Call at stream (re)start, when the pipeline
+    * owns the path exclusively — NOT while another writer is mid-apply
+    * on the same table, since its in-flight generation dirs are
+    * unreferenced by design.
     */
-  def startupGc(): Unit = {
-    recover()
-    if (fs.exists(root)) gc(manifest())
-  }
+  def startupGc(): Unit = gc()
 
   /** Compact the table: rewrite live state into a fresh generation
     * with one file per bucket, keeping the recorded epoch. Long streams
@@ -256,17 +248,15 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   /** Re-shard the table to a different hash fan-out and return the
     * handle for the new layout; the old handle's reads fail fast
-    * afterwards (bucket-count guard). One full read +
-    * one shuffled write — how a 100 TB table re-buckets — promoted by
-    * the same crash-atomic manifest commit; old generations are GC'd
-    * after the promote, so a crash anywhere leaves the old layout live.
+    * afterwards (bucket-count guard). One full read + one shuffled
+    * write — how a 100 TB table re-buckets — made visible by the same
+    * crash-atomic manifest commit, so a crash anywhere leaves the old
+    * layout live. Uncached: the write reads the old layout before the
+    * commit.
     */
   def rebucket(newBuckets: Int): KeyedTableSink = {
-    val data = load().cache()
-    data.count() // materialize before the promote drops old dirs
     val dst = new KeyedTableSink(spark, path, keys, schema, newBuckets)
-    dst.replace(data)
-    data.unpersist()
+    dst.replace(load())
     dst
   }
 
@@ -275,8 +265,9 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * is computed from the previous generation (the incremental
     * aggregate view, whose output IS the complete new aggregate
     * table). Hash-partitions `next` and swaps every bucket. Same
-    * crash-atomic manifest promote as `apply`; `next` may read the
-    * current generation (its files survive until the post-promote GC).
+    * crash-atomic manifest commit as `apply`; `next` may read the
+    * current generation (it is written before the commit, and its
+    * files are kept for one commit after).
     * `epoch` >= 0 is recorded in the manifest so a streaming replay of
     * the same foreachBatch epoch can detect the projection already
     * reflects this batch (`lastEpoch`) and skip — without it, a crash
@@ -292,7 +283,7 @@ class KeyedTableSink(spark: SparkSession, val path: String,
 
   /** Apply one LWW'd batch (typed rows + `op` column) with the given
     * write action (CdcMsgParser.java:225-248 dispatch). Both caches
-    * are released on every exit: after a failure past the promote, the
+    * are released on every exit: after a failure past the commit, the
     * retry reads new generation dirs, so it would never match, or
     * free, a state cache left behind.
     */
@@ -303,9 +294,9 @@ class KeyedTableSink(spark: SparkSession, val path: String,
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
       if (touched.nonEmpty) {
         val m = manifest()
-        // materialize before the swap invalidates the files. Kept: on
-        // cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50 ~14% but
-        // raised heap_live_mb 13%, past the benchmark's 10% bound
+        // the touched state, cached and materialized before the merge.
+        // Kept: on cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50
+        // ~14% but raised heap_live_mb 13%, past the benchmark's 10% bound
         val state =
           readDirs(touched.flatMap(b => m.get(b.toString))).cache()
         try {

@@ -332,9 +332,9 @@ object CdcPipeline {
     // graft SQL shims (unwrap, vec_dot) must be on the session BEFORE
     // start: micro-batch session clones inherit the registry
     graft.functions.GraftFunctions.register(spark)
-    // the restarting stream owns the sink path exclusively: roll any
-    // mid-promote crash forward and drop generations a crashed writer
-    // orphaned (they would otherwise persist until the next apply)
+    // the restarting stream owns the sink path exclusively: drop the
+    // generations and tmp manifests a crashed writer orphaned (they
+    // would otherwise persist until the next apply)
     p.sink.startupGc()
     source
       .writeStream

@@ -65,6 +65,23 @@ class BucketedSinkSpec extends AnyFunSuite {
     assert(rows(sink).contains((7L, 777L)))
   }
 
+  /** The committed manifests on disk, oldest first, parsed. */
+  def manifests(dir: String): Seq[Map[String, String]] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.matches("manifest-\\d+")).sorted.toSeq.map { n =>
+        new String(Files.readAllBytes(java.nio.file.Paths.get(dir, n)),
+          "UTF-8").split("\n").map { l =>
+          val Array(t, d) = l.split("\t", 2); t -> d
+        }.toMap
+      }
+
+  /** The g-* dirs a manifest references. */
+  def gens(m: Map[String, String]): Set[String] =
+    m.values.map(_.split("/")(0)).filter(_.startsWith("g-")).toSet
+
+  def listing(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.sorted
+
   test("compact() collapses small-file accumulation, state unchanged") {
     val dir = Files.createTempDirectory("buk-compact").toString
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
@@ -76,12 +93,13 @@ class BucketedSinkSpec extends AnyFunSuite {
       sink.apply(batch((i, i * 10, CdcParse.OpUpdate)), "upsertInto")
     }
     val before = rows(sink)
-    def parquetFiles(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir))
-        .count(_.getName.endsWith(".parquet"))
-    }
+    // parquet files of the live generations (the previous commit's are
+    // retained on disk for one more commit, but are not live)
+    def parquetFiles(): Int =
+      (sink.manifest() - "buckets" - "epoch").values.toSeq.map { d =>
+        new java.io.File(dir, d).listFiles()
+          .count(_.getName.endsWith(".parquet"))
+      }.sum
     val filesBefore = parquetFiles()
     sink.compact()
     assert(rows(sink) === before) // state identical
@@ -94,49 +112,54 @@ class BucketedSinkSpec extends AnyFunSuite {
     assert(rows(sink) === before + ((99L, 990L)))
   }
 
-  test("crash between manifest steps rolls forward (CURRENT.next wins)") {
+  /** What a writer that crashed after writing its generation, but
+    * before the rename, leaves on disk: the generation and a complete
+    * tmp manifest pointing at it.
+    */
+  def crashedWriter(dir: String): Unit = {
+    Seq((1L, -1L), (3L, 30L)).toDF("id", "v")
+      .write.parquet(s"$dir/g-deadbeef/__bucket=0")
+    Files.write(java.nio.file.Paths.get(dir, "manifest.tmp-ffff"),
+      "0\tg-deadbeef/__bucket=0\nbuckets\t4".getBytes("UTF-8"))
+  }
+
+  test("a crash before the manifest rename leaves the previous state live") {
     val dir = Files.createTempDirectory("buk4").toString
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
-    // simulate a crash mid-promote: CURRENT deleted, CURRENT.next
-    // holds the complete manifest (the only dangerous window of the
-    // old rename-chain swap)
-    val cur = new java.io.File(s"$dir/CURRENT")
-    val next = new java.io.File(s"$dir/CURRENT.next")
-    assert(cur.exists())
-    java.nio.file.Files.copy(cur.toPath, next.toPath)
-    assert(cur.delete())
-    // next read recovers the state instead of silently starting empty
+    crashedWriter(dir)
     assert(rows(sink) === Set((1L, 10L)))
-    // replay after "restart" still merges against recovered state
+    // the restarted writer commits on top of the previous state
     sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
-    // the writer rolled CURRENT.next forward
-    assert(cur.exists() && !next.exists())
     assert(rows(sink) === Set((1L, 10L), (2L, 20L)))
+    assert(!new java.io.File(dir, "g-deadbeef").exists())
+    assert(!new java.io.File(dir, "manifest.tmp-ffff").exists())
   }
 
-  test("reads never write: with CURRENT and CURRENT.next on disk, " +
-      "load() returns the .next state and leaves both files untouched") {
+  test("reads never write: load() skips a tmp manifest and orphan data") {
     val dir = Files.createTempDirectory("buk-ro").toString
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
-    val cur = new java.io.File(s"$dir/CURRENT").toPath
-    val old = Files.readAllBytes(cur)
     sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
-    // a writer stopped between "CURRENT.next appears" and the promote:
-    // both manifests on disk, CURRENT the older one
-    val next = new java.io.File(s"$dir/CURRENT.next").toPath
-    Files.move(cur, next)
-    Files.write(cur, old)
-    // Hadoop's checksum of the moved manifest no longer matches CURRENT
-    Files.deleteIfExists(new java.io.File(s"$dir/.CURRENT.crc").toPath)
-    val newer = Files.readAllBytes(next)
+    crashedWriter(dir)
+    val before = listing(dir)
     assert(rows(sink) === Set((1L, 10L), (2L, 20L)))
     assert(sink.exists && sink.lastEpoch.isEmpty)
-    assert(Files.readAllBytes(cur).sameElements(old))
-    assert(Files.readAllBytes(next).sameElements(newer))
+    assert(listing(dir) === before)
+  }
+
+  test("a load() stays readable after the next commit (snapshot read)") {
+    val dir = Files.createTempDirectory("buk-snap").toString
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema)
+    sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
+    val old = sink.load()
+    // rewrites the only bucket: the first generation is superseded
+    sink.apply(batch((1L, 11L, CdcParse.OpUpdate)), "upsertInto")
+    assert(old.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((1L, 10L)))
+    assert(rows(sink) === Set((1L, 11L)))
   }
 
   test("rebucket re-shards state; mismatched handle fails fast") {
@@ -153,12 +176,13 @@ class BucketedSinkSpec extends AnyFunSuite {
     intercept[IllegalStateException] { wrong.load() }
     val re = sink.rebucket(8)
     assert(rows(re) === before)
-    // old generations GC'd: only referenced g-* dirs remain
-    val gdirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("g-")).map(_.getName).toSet
-    val referenced = re.manifest().values
-      .map(_.split("/")(0)).filter(_.startsWith("g-")).toSet
-    assert(gdirs === referenced)
+    // old generations GC'd: every remaining g-* dir is referenced by
+    // one of the two newest manifests, the only ones kept
+    val gdirs = listing(dir).filter(_.startsWith("g-")).toSet
+    val kept = manifests(dir)
+    assert(kept.size === 2)
+    assert(gdirs === kept.map(gens).reduce(_ ++ _))
+    assert(gens(re.manifest()).subsetOf(gdirs))
     // merges keep working against the new layout
     re.apply(batch((7L, 777L, CdcParse.OpUpdate)), "upsertInto")
     assert(rows(re) === before - ((7L, 70L)) + ((7L, 777L)))
@@ -169,25 +193,50 @@ class BucketedSinkSpec extends AnyFunSuite {
     intercept[IllegalStateException] { re.load() }
   }
 
-  test("a table in the retired whole-table layout is refused, not read " +
-      "as empty") {
-    val dir = Files.createTempDirectory("buk-legacy").toString
-    // the manifest the whole-table layout wrote: one "flat" entry, no
-    // bucket count, its generation dir holding the rows
-    Seq((1L, 10L)).toDF("id", "v").write.parquet(s"$dir/g-0000aaaa")
-    Files.write(java.nio.file.Paths.get(dir, "CURRENT"),
-      "flat\tg-0000aaaa".getBytes("UTF-8"))
-    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema)
-    val e = intercept[IllegalStateException] { sink.load() }
-    assert(e.getMessage.contains("whole-table"), e.getMessage)
-    assert(e.getMessage.contains("spark.read.parquet"), e.getMessage)
-    intercept[IllegalStateException] {
-      sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
+  test("a failed rebucket releases every cache it took") {
+    val dir = Files.createTempDirectory("buk-rb0").toString
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
+      numBuckets = 4)
+    sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] { sink.rebucket(0) }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still persisted: $leaked")
+    assert(rows(sink) === Set((1L, 10L)))
+  }
+
+  test("retired CURRENT format (flat or bucketed) is refused, not read as " +
+      "empty") {
+    // the manifests the retired protocol wrote: the whole-table layout
+    // (one "flat" entry, no bucket count) and the bucketed layout
+    for ((name, rel, txt) <- Seq(
+        ("CURRENT", "g-0000aaaa", "flat\tg-0000aaaa"),
+        ("CURRENT.next", "g-0000aaaa/__bucket=0",
+          "0\tg-0000aaaa/__bucket=0\nbuckets\t1"))) {
+      val dir = Files.createTempDirectory("buk-legacy").toString
+      val data = s"$dir/$rel"
+      Seq((1L, 10L)).toDF("id", "v").write.parquet(data)
+      Files.write(java.nio.file.Paths.get(dir, name), txt.getBytes("UTF-8"))
+      val before = listing(dir)
+      val sink = new KeyedTableSink(spark, dir, Seq("id"), schema)
+      val e = intercept[IllegalStateException] { sink.load() }
+      assert(e.getMessage.contains(name), e.getMessage)
+      assert(e.getMessage.contains(data), e.getMessage)
+      assert(e.getMessage.contains("spark.read.parquet"), e.getMessage)
+      intercept[IllegalStateException] {
+        sink.apply(batch((2L, 20L, CdcParse.OpUpdate)), "upsertInto")
+      }
+      intercept[IllegalStateException] {
+        sink.replace(Seq((2L, 20L)).toDF("id", "v"))
+      }
+      intercept[IllegalStateException] { sink.startupGc() }
+      // the legacy data is untouched, and no writer added anything
+      assert(listing(dir) === before)
+      assert(spark.read.parquet(data).count() === 1)
     }
-    // the legacy data is untouched
-    assert(spark.read.parquet(s"$dir/g-0000aaaa").count() === 1)
     intercept[IllegalArgumentException] {
-      new KeyedTableSink(spark, dir, Seq("id"), schema, numBuckets = 0)
+      new KeyedTableSink(spark, Files.createTempDirectory("buk0").toString,
+        Seq("id"), schema, numBuckets = 0)
     }
   }
 
@@ -226,16 +275,16 @@ class BucketedSinkSpec extends AnyFunSuite {
       (2L, 20L, CdcParse.OpUpdate)), "upsertInto")
     val before = rows(sink)
     // simulate a writer that crashed after writing data but before the
-    // manifest promote: an unreferenced generation dir + tmp manifest
+    // manifest rename: an unreferenced generation dir + tmp manifest
     val orphan = new java.io.File(dir, "g-deadbeef")
     assert(orphan.mkdir())
     Files.write(orphan.toPath.resolve("part-0.parquet"),
       Array[Byte](1, 2, 3))
-    Files.write(java.nio.file.Paths.get(dir, "CURRENT.tmp-ffff"),
+    Files.write(java.nio.file.Paths.get(dir, "manifest.tmp-ffff"),
       "junk".getBytes)
     sink.startupGc()
     assert(!orphan.exists())
-    assert(!new java.io.File(dir, "CURRENT.tmp-ffff").exists())
+    assert(!new java.io.File(dir, "manifest.tmp-ffff").exists())
     assert(rows(sink) === before)
     // on a brand-new (never-applied) table it is a no-op, not a crash
     val fresh = new KeyedTableSink(spark,
