@@ -13,6 +13,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def main():
+    # one line per query as it finishes, also into a redirected log: the
+    # query running now is the one after the last line
+    sys.stdout.reconfigure(line_buffering=True)
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()

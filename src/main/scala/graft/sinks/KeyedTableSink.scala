@@ -37,7 +37,11 @@ import scala.util.{Failure, Try}
   * Layout: the state is hash-partitioned on the key into `numBuckets`
   * (>= 1) per-bucket generation dirs; a batch touches only the buckets
   * its keys hash to, so the merge reads and rewrites ONLY those
-  * (manifest entries for untouched buckets carry over). Keys are
+  * (manifest entries for untouched buckets carry over). When
+  * `numBuckets` is above 1 and >= the session's cores, every write is
+  * clustered by bucket, so a generation holds one parquet file per
+  * bucket. Below that (app/Main's one-bucket sinks among them) the
+  * merge output is written as it is partitioned. Keys are
   * hashed, so a batch that is large next to the bucket count still
   * touches nearly every bucket and rewrites nearly the whole table. A
   * lake format (Delta/Iceberg MERGE) would drop in behind the same
@@ -179,6 +183,12 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * entries at the new dirs; entries of other buckets in `prev` carry
     * over. An emptied bucket (no rows survived) simply drops its entry.
     * The commit is the rename of the synced manifest to number `n`.
+    *
+    * With `numBuckets` > 1 and >= cores the write is clustered by
+    * bucket: `repartition(P, keys)` places a row in partition
+    * `pmod(murmur3(keys), P)`, the hash `bucketOf` takes mod
+    * `numBuckets`, and `P` (`KeyedTableSink.writeTasks`) divides
+    * `numBuckets`. So every task writes whole buckets, one file each.
     */
   private def swapBuckets(prev: Map[String, String], next: DataFrame,
       buckets: Seq[Int]): Unit = {
@@ -186,7 +196,10 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     val n = committed(listRoot()).lastOption.getOrElse(0L) + 1
     val gen = s"g-${uuid()}"
     val genPath = new Path(root, gen)
-    next.withColumn("__bucket", bucketOf)
+    val clustered = KeyedTableSink.writeTasks(numBuckets,
+      spark.sparkContext.defaultParallelism)
+      .fold(next)(tasks => next.repartition(tasks, keys.map(col): _*))
+    clustered.withColumn("__bucket", bucketOf)
       .write.mode("overwrite").partitionBy("__bucket")
       .parquet(genPath.toString)
     val written = fs.listStatus(genPath).map(_.getPath.getName)
@@ -238,11 +251,14 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   def startupGc(): Unit = gc()
 
   /** Compact the table: rewrite live state into a fresh generation
-    * with one file per bucket, keeping the recorded epoch. Long streams
-    * of small batches accumulate small parquet files per bucket
-    * generation; run this periodically (it is itself a crash-atomic
-    * manifest commit, so it can race nothing and replay-safely no-ops
-    * on identical state).
+    * with one file per bucket when `numBuckets` >= cores (the clustered
+    * write of `swapBuckets`), keeping the recorded epoch. Writes through
+    * this sink do not pile up files per bucket, so this is now a
+    * one-time migration of generations written before the write was
+    * clustered (or on a session with more cores), until merge-on-read
+    * deltas give it folding to do (ROADMAP item 4). It is itself a
+    * crash-atomic manifest commit, so it can race nothing and
+    * replay-safely no-ops on identical state.
     */
   def compact(): Unit = replace(load(), lastEpoch.getOrElse(-1L))
 
@@ -264,10 +280,9 @@ class KeyedTableSink(spark: SparkSession, val path: String,
     * load, a re-shard, or a maintained projection whose next content
     * is computed from the previous generation (the incremental
     * aggregate view, whose output IS the complete new aggregate
-    * table). Hash-partitions `next` and swaps every bucket. Same
-    * crash-atomic manifest commit as `apply`; `next` may read the
-    * current generation (it is written before the commit, and its
-    * files are kept for one commit after).
+    * table). Swaps every bucket. Same crash-atomic manifest commit as
+    * `apply`; `next` may read the current generation (it is written
+    * before the commit, and its files are kept for one commit after).
     * `epoch` >= 0 is recorded in the manifest so a streaming replay of
     * the same foreachBatch epoch can detect the projection already
     * reflects this batch (`lastEpoch`) and skip — without it, a crash
@@ -277,8 +292,7 @@ class KeyedTableSink(spark: SparkSession, val path: String,
   def replace(next: DataFrame, epoch: Long = -1L): Unit = {
     val meta: Map[String, String] =
       if (epoch >= 0) Map(MetaEpoch -> epoch.toString) else Map.empty
-    swapBuckets(meta, next.repartition(numBuckets, bucketOf),
-      0 until numBuckets)
+    swapBuckets(meta, next, 0 until numBuckets)
   }
 
   /** Apply one LWW'd batch (typed rows + `op` column) with the given
@@ -296,7 +310,11 @@ class KeyedTableSink(spark: SparkSession, val path: String,
         val m = manifest()
         // the touched state, cached and materialized before the merge.
         // Kept: on cdc_tail (4 seeds, 4 cores) dropping it cut lag_p50
-        // ~14% but raised heap_live_mb 13%, past the benchmark's 10% bound
+        // ~14% but raised heap_live_mb 13%, past the benchmark's 10%
+        // bound. On the bucket-clustered write (cdc_tail seeds 5-6, 4
+        // cores) heap_live_mb read 147.6/145.3 MB without it against
+        // 128.6/128.3 MB with it; a second pair read 135.3/150.4 MB
+        // against 133.2/130.4 MB
         val state =
           readDirs(touched.flatMap(b => m.get(b.toString))).cache()
         try {
@@ -306,4 +324,26 @@ class KeyedTableSink(spark: SparkSession, val path: String,
       }
     } finally cached.unpersist()
   }
+}
+
+object KeyedTableSink {
+
+  /** Write tasks of a bucket-clustered generation write of `buckets`
+    * buckets on `cores` cores, or None for no clustering shuffle.
+    * Measured at 32 buckets on 4 cores (4 tasks): one file per bucket
+    * cut `cdc_tail` `lag_p50_ms` by a third. It is the largest divisor
+    * of `buckets` <= `cores` (each task holds whole buckets), unless
+    * that is under half the cores (a prime bucket count): then one task
+    * per bucket, the shape of a 32-task prototype that cost `cdc_bulk`
+    * ~5% `rows_per_s`; no caller uses such a count. None for one
+    * bucket, where every task already writes whole buckets and the
+    * shuffle only adds a full-table exchange, and below `cores`
+    * buckets, which no caller uses and nothing measured.
+    */
+  private[graft] def writeTasks(buckets: Int, cores: Int): Option[Int] =
+    if (buckets == 1 || buckets < cores) None
+    else {
+      val d = (cores to 1 by -1).find(buckets % _ == 0).get
+      Some(if (2 * d < cores) buckets else d)
+    }
 }

@@ -27,10 +27,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object CdcPipeline {
 
-  /** Per-query status for the monitoring surface (O14). */
-  final case class Status(id: String, var ok: Boolean = true,
-    var status: String = "RUNNING", var lastReaded: Long = 0L,
-    var lastWrited: Long = 0L, var rowsWritten: Long = 0L)
+  /** Per-query status for the monitoring surface (O14). Stream threads
+    * write the fields and the status server's thread reads them, so
+    * each is volatile: a reader sees every field's latest write, though
+    * not necessarily all fields of one batch together.
+    */
+  final case class Status(id: String, @volatile var ok: Boolean = true,
+    @volatile var status: String = "RUNNING",
+    @volatile var lastReaded: Long = 0L,
+    @volatile var lastWrited: Long = 0L,
+    @volatile var rowsWritten: Long = 0L)
 
   val statuses = new java.util.concurrent.ConcurrentHashMap[String, Status]()
 

@@ -24,7 +24,8 @@ import java.nio.file.Files
   *    (recorded cutoff) and resumes the tail's checkpoint; a crash
   *    BEFORE the cutoff record re-bootstraps idempotently.
   */
-class BootstrapTailSpec extends AnyFunSuite with StopStreamsAfterAll {
+class BootstrapTailSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -40,7 +41,7 @@ class BootstrapTailSpec extends AnyFunSuite with StopStreamsAfterAll {
     StructField("value_milli", LongType)))
 
   def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag")
 
   def tuple3(r: org.apache.spark.sql.Row): (Long, String, Option[Long]) =
     (r.getLong(0), r.getString(1),
@@ -64,8 +65,10 @@ class BootstrapTailSpec extends AnyFunSuite with StopStreamsAfterAll {
       numBuckets: Int = 1): CdcPipeline.Pipeline = {
     val sink = new KeyedTableSink(spark, freshDir(s"$tag-sink"),
       Seq("user_id"), sinkSchema, numBuckets)
-    CdcPipeline.Pipeline(s"test-$tag", live, freshDir(s"$tag-ckpt"),
-      schema,
+    // BootstrapTail keeps its cutoff file beside the checkpoint dir,
+    // so the checkpoint nests in a temp dir that holds both
+    CdcPipeline.Pipeline(s"test-$tag", live,
+      freshDir(s"$tag-ckpt") + "/ckpt", schema,
       Some("SELECT user_id, event_type, value_milli FROM rows"),
       None, sink, maxFilesPerTrigger = 2)
   }

@@ -3,6 +3,7 @@ package graft
 import graft.operators.CdcParse
 import graft.sinks.KeyedTableSink
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,7 +11,7 @@ import java.nio.file.Files
 /** Bucketed keyed sink: same results at any bucket count, and merges
   * rewrite only the touched bucket directories.
   */
-class BucketedSinkSpec extends AnyFunSuite {
+class BucketedSinkSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -26,8 +27,8 @@ class BucketedSinkSpec extends AnyFunSuite {
     s.load().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("one-bucket apply matches 8-bucket apply across actions") {
-    val oneDir = Files.createTempDirectory("one").toString
-    val bukDir = Files.createTempDirectory("buk").toString
+    val oneDir = tempDir("one")
+    val bukDir = tempDir("buk")
     val one = new KeyedTableSink(spark, oneDir, Seq("id"), schema)
     val buk = new KeyedTableSink(spark, bukDir, Seq("id"), schema,
       numBuckets = 8)
@@ -47,7 +48,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("untouched bucket directories are not rewritten") {
-    val dir = Files.createTempDirectory("buk2").toString
+    val dir = tempDir("buk2")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 8)
     // spread keys over several buckets
@@ -82,24 +83,82 @@ class BucketedSinkSpec extends AnyFunSuite {
   def listing(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.sorted
 
-  test("compact() collapses small-file accumulation, state unchanged") {
-    val dir = Files.createTempDirectory("buk-compact").toString
+  /** Parquet files in each live bucket dir of the sink at `dir`. */
+  def filesPerBucket(sink: KeyedTableSink, dir: String): Map[String, Int] =
+    (sink.manifest() - "buckets" - "epoch").map { case (b, d) =>
+      b -> new java.io.File(dir, d).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+    }
+
+  /** Keys in each live bucket dir of the sink at `dir`. */
+  def keysPerBucket(sink: KeyedTableSink, dir: String): Map[String, Set[Long]] =
+    (sink.manifest() - "buckets" - "epoch").map { case (b, d) =>
+      b -> spark.read.parquet(s"$dir/$d").select("id").as[Long]
+        .collect().toSet
+    }
+
+  def spread(n: Long): DataFrame =
+    batch((0L until n).map(i => (i, i * 10, CdcParse.OpUpdate)): _*)
+      .repartition(4)
+
+  test("apply writes one parquet file per touched bucket") {
+    val dir = tempDir("buk-clu")
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
+      numBuckets = 8)
+    sink.apply(spread(200), "upsertInto")
+    val first = filesPerBucket(sink, dir)
+    assert(first.size === 8 && first.values.forall(_ == 1), s"$first")
+    // a merge against existing state keeps the layout
+    sink.apply(spread(300), "upsertInto")
+    val second = filesPerBucket(sink, dir)
+    assert(second.size === 8 && second.values.forall(_ == 1), s"$second")
+    assert(rows(sink) === (0L until 300L).map(i => (i, i * 10)).toSet)
+  }
+
+  test("replace writes one parquet file per bucket") {
+    val dir = tempDir("buk-clu-r")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
-    // a maintained projection's recorded epoch must survive compaction
-    sink.replace(sink.load(), epoch = 7L)
-    // many tiny batches -> many generations referenced per bucket
-    (0L until 12L).foreach { i =>
-      sink.apply(batch((i, i * 10, CdcParse.OpUpdate)), "upsertInto")
-    }
+    sink.replace(spread(200).select("id", "v"))
+    val files = filesPerBucket(sink, dir)
+    assert(files.size === 4 && files.values.forall(_ == 1), s"$files")
+    assert(rows(sink) === (0L until 200L).map(i => (i, i * 10)).toSet)
+  }
+
+  test("write tasks divide the bucket count; one bucket is not clustered") {
+    val cases = Seq((32, 4) -> Some(4), (8, 4) -> Some(4),
+      (31, 4) -> Some(31), (1, 4) -> None, (1, 1) -> None, (3, 4) -> None)
+    for (((buckets, cores), tasks) <- cases)
+      assert(KeyedTableSink.writeTasks(buckets, cores) === tasks,
+        s"buckets=$buckets cores=$cores")
+  }
+
+  test("compact() collapses small-file accumulation, state unchanged") {
+    val dir = tempDir("buk-compact")
+    // a table an unclustered writer left (every write task put one file
+    // into each bucket it held), with a maintained projection's recorded
+    // epoch, which must survive compaction. Writes through the sink are
+    // clustered, so they do not pile up files per bucket themselves.
+    (0L until 40L).map(i => (i, i * 10)).toDF("id", "v")
+      .withColumn("__bucket", pmod(hash(col("id")), lit(4)))
+      .repartition(3).write.partitionBy("__bucket")
+      .parquet(s"$dir/g-0000aaaa")
+    Files.write(java.nio.file.Paths.get(dir, "manifest-%020d".format(1)),
+      ((0 until 4).map(b => s"$b\tg-0000aaaa/__bucket=$b") ++
+        Seq("buckets\t4", "epoch\t7")).mkString("\n").getBytes("UTF-8"))
+    val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
+      numBuckets = 4)
+    // the hand-built table copies the sink's manifest format and bucket
+    // hash: a table the sink writes from the same rows must match it
+    val refDir = tempDir("buk-compact-ref")
+    val ref = new KeyedTableSink(spark, refDir, Seq("id"), schema,
+      numBuckets = 4)
+    ref.apply(spread(40), "upsertInto")
+    assert(keysPerBucket(sink, dir) === keysPerBucket(ref, refDir))
     val before = rows(sink)
     // parquet files of the live generations (the previous commit's are
     // retained on disk for one more commit, but are not live)
-    def parquetFiles(): Int =
-      (sink.manifest() - "buckets" - "epoch").values.toSeq.map { d =>
-        new java.io.File(dir, d).listFiles()
-          .count(_.getName.endsWith(".parquet"))
-      }.sum
+    def parquetFiles(): Int = filesPerBucket(sink, dir).values.sum
     val filesBefore = parquetFiles()
     sink.compact()
     assert(rows(sink) === before) // state identical
@@ -124,7 +183,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("a crash before the manifest rename leaves the previous state live") {
-    val dir = Files.createTempDirectory("buk4").toString
+    val dir = tempDir("buk4")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
@@ -138,7 +197,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("reads never write: load() skips a tmp manifest and orphan data") {
-    val dir = Files.createTempDirectory("buk-ro").toString
+    val dir = tempDir("buk-ro")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
@@ -151,7 +210,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("a load() stays readable after the next commit (snapshot read)") {
-    val dir = Files.createTempDirectory("buk-snap").toString
+    val dir = tempDir("buk-snap")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
     val old = sink.load()
@@ -163,7 +222,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("rebucket re-shards state; mismatched handle fails fast") {
-    val dir = Files.createTempDirectory("buk-rb").toString
+    val dir = tempDir("buk-rb")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     val data = (0L to 30L).map(i => (i, i * 10, CdcParse.OpUpdate))
@@ -194,7 +253,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("a failed rebucket releases every cache it took") {
-    val dir = Files.createTempDirectory("buk-rb0").toString
+    val dir = tempDir("buk-rb0")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
@@ -213,7 +272,7 @@ class BucketedSinkSpec extends AnyFunSuite {
         ("CURRENT", "g-0000aaaa", "flat\tg-0000aaaa"),
         ("CURRENT.next", "g-0000aaaa/__bucket=0",
           "0\tg-0000aaaa/__bucket=0\nbuckets\t1"))) {
-      val dir = Files.createTempDirectory("buk-legacy").toString
+      val dir = tempDir("buk-legacy")
       val data = s"$dir/$rel"
       Seq((1L, 10L)).toDF("id", "v").write.parquet(data)
       Files.write(java.nio.file.Paths.get(dir, name), txt.getBytes("UTF-8"))
@@ -235,13 +294,13 @@ class BucketedSinkSpec extends AnyFunSuite {
       assert(spark.read.parquet(data).count() === 1)
     }
     intercept[IllegalArgumentException] {
-      new KeyedTableSink(spark, Files.createTempDirectory("buk0").toString,
+      new KeyedTableSink(spark, tempDir("buk0"),
         Seq("id"), schema, numBuckets = 0)
     }
   }
 
   test("emptied bucket disappears; replay is idempotent") {
-    val dir = Files.createTempDirectory("buk3").toString
+    val dir = tempDir("buk3")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((5L, 50L, CdcParse.OpUpdate)), "upsertInto")
@@ -253,7 +312,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("a failed apply releases the batch and state caches") {
-    val dir = Files.createTempDirectory("buk6").toString
+    val dir = tempDir("buk6")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate)), "upsertInto")
@@ -268,7 +327,7 @@ class BucketedSinkSpec extends AnyFunSuite {
   }
 
   test("startupGc removes a crashed writer's orphans, keeps live state") {
-    val dir = Files.createTempDirectory("buk4").toString
+    val dir = tempDir("buk4")
     val sink = new KeyedTableSink(spark, dir, Seq("id"), schema,
       numBuckets = 4)
     sink.apply(batch((1L, 10L, CdcParse.OpUpdate),
@@ -288,7 +347,7 @@ class BucketedSinkSpec extends AnyFunSuite {
     assert(rows(sink) === before)
     // on a brand-new (never-applied) table it is a no-op, not a crash
     val fresh = new KeyedTableSink(spark,
-      Files.createTempDirectory("buk5").toString + "/nested",
+      tempDir("buk5") + "/nested",
       Seq("id"), schema, numBuckets = 4)
     fresh.startupGc()
   }

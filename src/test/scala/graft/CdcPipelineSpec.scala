@@ -15,7 +15,8 @@ import java.nio.file.Files
   * compare the final table to the batch-computed expectation; prove
   * replay idempotence by re-running with a fresh checkpoint.
   */
-class CdcPipelineSpec extends AnyFunSuite with StopStreamsAfterAll {
+class CdcPipelineSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -31,7 +32,7 @@ class CdcPipelineSpec extends AnyFunSuite with StopStreamsAfterAll {
     StructField("value_milli", LongType)))
 
   def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag")
 
   /** Batch-computed golden: LWW over the whole changelog, erase wins
     * removed, identical envelope parse path.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference XML config semantics (O11/O12). */
-class ConfigSpec extends AnyFunSuite {
+class ConfigSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   val xml =
@@ -226,8 +226,7 @@ class ConfigSpec extends AnyFunSuite {
     val npSchema = StructType(schema.fields :+ StructField("np", LongType))
     val cdcSchemaNp = graft.operators.CdcParse.CdcSchema(npSchema,
       Seq("user_id"))
-    val sinkDir = java.nio.file.Files
-      .createTempDirectory("graft-tc-sink").toString
+    val sinkDir = tempDir("graft-tc-sink")
     val sink = new graft.sinks.KeyedTableSink(spark, sinkDir,
       Seq("user_id"), npSchema)
     val p = pipelineStub(threadsCount = 2).copy(

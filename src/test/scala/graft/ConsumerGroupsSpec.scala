@@ -19,7 +19,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * the late consumer's run must not disturb the early consumer's
   * offsets or sink.
   */
-class ConsumerGroupsSpec extends AnyFunSuite with StopStreamsAfterAll {
+class ConsumerGroupsSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -35,7 +36,7 @@ class ConsumerGroupsSpec extends AnyFunSuite with StopStreamsAfterAll {
     StructField("value_milli", LongType)))
 
   def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag")
 
   def golden(changelogDir: String): Set[(Long, String, Option[Long])] = {
     val all = Changelog.readBatch(spark, changelogDir)

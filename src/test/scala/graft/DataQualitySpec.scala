@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Data-quality profiling/validation: violation detection on doctored
   * data and the one-pass plan contract.
   */
-class DataQualitySpec extends AnyFunSuite {
+class DataQualitySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("profile: one scan of lineitem (single Expand, no join)") {
@@ -48,8 +48,7 @@ class DataQualitySpec extends AnyFunSuite {
 
   test("checks flag injected violations") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("dqspec").toString
+    val dir = tempDir("dqspec")
     // copy the sf tables, then doctor lineitem: duplicate one PK pair
     // and flip one discount out of range
     val li = spark.read
@@ -89,8 +88,7 @@ class DataQualitySpec extends AnyFunSuite {
         else (if (i % 10 < 2) "click" else "view")
       (ts, et, v)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("driftspec").toString
+    val dir = tempDir("driftspec")
     rows.toDF("ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val shifted = DataQuality.drift(spark, dir)

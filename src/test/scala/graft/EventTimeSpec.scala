@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * expressions as EventTimeQueries run with readStream + watermark and
   * must produce the batch answer once all data is processed.
   */
-class EventTimeSpec extends AnyFunSuite with StopStreamsAfterAll {
+class EventTimeSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("streaming tumbling window + watermark == batch result") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-evstream").toString
+    val dir = tempDir("graft-evstream")
     // stage the events parquet alone in its own dir
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
     ev.write.mode("overwrite").parquet(dir)
@@ -39,8 +39,7 @@ class EventTimeSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("streaming sliding window + watermark == batch result") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-evslide").toString
+    val dir = tempDir("graft-evslide")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
     ev.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(ev.schema)
@@ -66,8 +65,7 @@ class EventTimeSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("streaming session windows + watermark == batch result") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("graft-sess")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
     ev.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(ev.schema)
@@ -93,8 +91,7 @@ class EventTimeSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("append mode drops only late rows beyond watermark") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-evstream2").toString
+    val dir = tempDir("graft-evstream2")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
     // write in event order so watermark advances monotonically
     ev.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(dir)

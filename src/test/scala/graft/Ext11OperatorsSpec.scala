@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver replay, recall is a true set-overlap ratio, and temperature
   * scaling actually flattens the mixture.
   */
-class Ext11OperatorsSpec extends AnyFunSuite {
+class Ext11OperatorsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("kappa aggregates are consistent with the per-class PRF table") {
@@ -153,8 +153,7 @@ class Ext11OperatorsSpec extends AnyFunSuite {
     // deterministic direction (J=1 => identical signatures) needs a
     // controlled corpus: two identical docs + one overlapping decoy
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mh").toString
+    val dir = tempDir("graft-mh")
     Seq(
       (0L, "alpha beta gamma delta epsilon zeta"),
       (1L, "alpha beta gamma delta epsilon zeta"),

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recomputation incl. the variance-reduction identity) and the
   * pivot-sampled effective-diameter reach fractions (exact BFS).
   */
-class Ext86QueriesSpec extends AnyFunSuite {
+class Ext86QueriesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("cuped: exact-moment replay; adjusted variance never exceeds " +
@@ -82,8 +82,7 @@ class Ext86QueriesSpec extends AnyFunSuite {
     // the degenerate shape where a GLOBAL agg would emit 3 rows of
     // (n_pivots=0, NULL) the DuckDB oracle never produces
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-effdiam").toString
+    val dir = tempDir("graft-effdiam")
     Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta"),
       (1L, "uno dos tres cuatro cinco seis siete ocho nueve"),

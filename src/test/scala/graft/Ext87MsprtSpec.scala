@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * −ln p is monotone non-decreasing — and a controlled shifted-arm
   * fixture where the evidence must actually accumulate.
   */
-class Ext87MsprtSpec extends AnyFunSuite {
+class Ext87MsprtSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def lnlamMicro(n0: Long, s0: Long, q0: Long,
@@ -104,8 +104,7 @@ class Ext87MsprtSpec extends AnyFunSuite {
       val uid = if (i % 10 == 0) 1L + 2 * i else 2L * i // 10% odd
       (uid, (i % 10).toLong * dayNs + 3600000000000L, 0.1 + i % 3)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("srm-broken").toString
+    val dir = tempDir("srm-broken")
     rows.toDF("user_id", "ts", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val broken = operators.Ext87Queries.srm(spark, dir).collect()
@@ -140,12 +139,10 @@ class Ext87MsprtSpec extends AnyFunSuite {
       (i.toLong, day * dayNs + (i % 24) * 3600000000000L,
         vm.toDouble / 1000.0)
     }
-    val dirA = java.nio.file.Files
-      .createTempDirectory("msprt-eff").toString
+    val dirA = tempDir("msprt-eff")
     mk(50L).toDF("user_id", "ts", "value")
       .write.mode("overwrite").parquet(s"$dirA/events.parquet")
-    val dirB = java.nio.file.Files
-      .createTempDirectory("msprt-null").toString
+    val dirB = tempDir("msprt-null")
     mk(0L).toDF("user_id", "ts", "value")
       .write.mode("overwrite").parquet(s"$dirB/events.parquet")
     val eff = Ext87Queries.msprt(spark, dirA).collect()

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * data, probe-count monotonicity, and the plan contract (corpus side
   * stays a narrow projection; the probe table broadcasts).
   */
-class IvfPqSpec extends AnyFunSuite {
+class IvfPqSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   def emb = spark.read
@@ -65,8 +65,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("build once, probe many: a saved+reloaded index and code " +
       "table answers identically to the direct path") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivfpq-idx").toString
+    val dir = tempDir("ivfpq-idx")
     val qs = emb.filter(col("vec_id") < 4)
     val idx = IvfPq.fit(emb, "vec_id", "embedding", nCells = 16,
       coarseIters = 2)
@@ -86,8 +85,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("cell-partitioned code table: probing answers identically " +
       "and the scan carries a dynamic partition-pruning filter") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivfpq-part").toString
+    val dir = tempDir("ivfpq-part")
     val qs = emb.filter(col("vec_id") < 4)
     val idx = IvfPq.fit(emb, "vec_id", "embedding", nCells = 16,
       coarseIters = 2)

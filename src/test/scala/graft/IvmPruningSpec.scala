@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * buckets' files, so recompute cost follows the delta, not the
   * table.
   */
-class IvmPruningSpec extends AnyFunSuite {
+class IvmPruningSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("touched-key semi-join against bucket-partitioned state " +
@@ -20,8 +20,7 @@ class IvmPruningSpec extends AnyFunSuite {
       col("event_id"), col("user_id"), col("event_type"),
       round(col("value") * 1000).cast("long").as("vm"),
       (col("event_id") % 7 === 0).as("del"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivm-state").toString
+    val dir = tempDir("ivm-state")
     // persisted state: full LWW, bucketed on the key (the delta
     // below touches a USER slice so the touched-bucket set is a
     // strict subset at every SF — event-sliced deltas touch every

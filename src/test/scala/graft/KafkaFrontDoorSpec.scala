@@ -23,7 +23,8 @@ import java.nio.file.Files
   * ordering, admission caps, checkpointed restarts — is the
   * production path, exercised for real here.
   */
-class KafkaFrontDoorSpec extends AnyFunSuite with StopStreamsAfterAll {
+class KafkaFrontDoorSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -34,7 +35,7 @@ class KafkaFrontDoorSpec extends AnyFunSuite with StopStreamsAfterAll {
     pk = Seq("user_id"))
 
   def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag")
 
   def kafkaStream(topic: String, opts: (String, String)*): DataFrame = {
     var r = spark.readStream

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Merge-action semantics + idempotence (SURVEY.md §7.3, O8/O10). */
-class KeyedMergeSpec extends AnyFunSuite {
+class KeyedMergeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -139,7 +139,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     // the guard: a replace stamped with the epoch is detected on
     // replay and the delta is skipped, leaving the exact aggregate
     val sink = new graft.sinks.KeyedTableSink(spark,
-      java.nio.file.Files.createTempDirectory("agg-epoch").toString,
+      tempDir("agg-epoch"),
       Seq("name"), org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("name",
           org.apache.spark.sql.types.StringType),

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * small dimensions broadcast, grouped top-k never window-sorts, and
   * the LWW merge shuffles exactly once on the key.
   */
-class PlanAssertionsSpec extends AnyFunSuite {
+class PlanAssertionsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   val dir = TestSpark.sfDir
 
@@ -128,8 +128,7 @@ class PlanAssertionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val typed = graft.operators.CdcParse.parseEnvelope(
       graft.sources.Changelog.readBatch(spark, {
-        val d = java.nio.file.Files
-          .createTempDirectory("plan-clog").toString
+        val d = tempDir("plan-clog")
         graft.sources.Changelog.writeFromEvents(spark,
           s"$dir/events.parquet", d, numFiles = 1)
         d

@@ -16,7 +16,8 @@ import java.nio.file.Files
   * with the transform YQL taken VERBATIM from the reference README and
   * run through YqlTranslate.
   */
-class ReadmeScenarioSpec extends AnyFunSuite with StopStreamsAfterAll {
+class ReadmeScenarioSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   // table_source schema (README.md:20-31), PK order = key array order
@@ -100,12 +101,12 @@ class ReadmeScenarioSpec extends AnyFunSuite with StopStreamsAfterAll {
     val tr = YqlTranslate(yql)
     assert(tr.actionMode === "upsertInto")
     val sink = new KeyedTableSink(spark,
-      Files.createTempDirectory(tr.actionTable).toString, sinkPk,
+      tempDir(tr.actionTable), sinkPk,
       sinkSchema)
     val p = CdcPipeline.Pipeline(
       consumer = tr.actionTable + System.nanoTime(),
       changelogDir = changelog,
-      checkpointDir = Files.createTempDirectory("ck").toString,
+      checkpointDir = tempDir("ck"),
       schema = srcSchema,
       updateSql = Some(tr.sql), deleteSql = None,
       sink = sink, action = tr.actionMode,
@@ -115,7 +116,7 @@ class ReadmeScenarioSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("mat_view1: verbatim README YQL — Text->Timestamp re-type (A2)") {
-    val changelog = Files.createTempDirectory("readme-clog").toString
+    val changelog = tempDir("readme-clog")
     writeChangelog(changelog)
     val sinkSchema = StructType(Seq(
       StructField("event_time", TimestampType),
@@ -143,7 +144,7 @@ class ReadmeScenarioSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("mat_view2: verbatim README YQL — SELECT * under different PK (A3)") {
-    val changelog = Files.createTempDirectory("readme-clog2").toString
+    val changelog = tempDir("readme-clog2")
     writeChangelog(changelog)
     val sinkSchema = StructType(Seq(
       StructField("event_type", StringType),

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** O10 retry semantics (YqlWriter.java:244-262): exponential backoff
   * with jitter, log escalation, eventual success without data loss.
   */
-class RetrySpec extends AnyFunSuite {
+class RetrySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -20,7 +20,7 @@ class RetrySpec extends AnyFunSuite {
     CdcPipeline.Pipeline("retry-test", "/none", "/none", schema,
       Some("SELECT 1"), None,
       new KeyedTableSink(spark,
-        java.nio.file.Files.createTempDirectory("rt").toString,
+        tempDir("rt"),
         Seq("user_id"), schema.columns),
       errorThreshold = threshold, maxRetries = maxRetries)
 

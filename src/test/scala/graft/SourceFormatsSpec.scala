@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** File-format source/sink breadth (SURVEY §2.3 lists these as absent
   * from the reference — the rebuild provides them via spark.read/write):
   * CSV and JSON round-trips must reproduce the parquet source.
   */
-class SourceFormatsSpec extends AnyFunSuite {
+class SourceFormatsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   def canon(df: org.apache.spark.sql.DataFrame) =
@@ -19,12 +18,12 @@ class SourceFormatsSpec extends AnyFunSuite {
   test("csv and json round-trips equal the parquet source") {
     val o = Tables.t(spark, TestSpark.sfDir, "orders")
     val base = canon(o)
-    val csvDir = Files.createTempDirectory("fmt-csv").toString
+    val csvDir = tempDir("fmt-csv")
     o.write.mode("overwrite").option("header", "true").csv(csvDir)
     val fromCsv = spark.read.option("header", "true")
       .schema(o.schema).csv(csvDir)
     assert(canon(fromCsv) === base)
-    val jsonDir = Files.createTempDirectory("fmt-json").toString
+    val jsonDir = tempDir("fmt-json")
     o.write.mode("overwrite").json(jsonDir)
     val fromJson = spark.read.schema(o.schema).json(jsonDir)
     assert(canon(fromJson) === base)
@@ -32,7 +31,7 @@ class SourceFormatsSpec extends AnyFunSuite {
 
   test("orc round-trip equals the parquet source; filter pushes down") {
     val o = Tables.t(spark, TestSpark.sfDir, "orders")
-    val orcDir = Files.createTempDirectory("fmt-orc").toString
+    val orcDir = tempDir("fmt-orc")
     o.write.mode("overwrite").orc(orcDir)
     val fromOrc = spark.read.schema(o.schema).orc(orcDir)
     assert(canon(fromOrc) === canon(o))
@@ -43,7 +42,7 @@ class SourceFormatsSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes on read") {
-    val dir = Files.createTempDirectory("fmt-part").toString
+    val dir = tempDir("fmt-part")
     Tables.t(spark, TestSpark.sfDir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
     val one = spark.read.parquet(dir)

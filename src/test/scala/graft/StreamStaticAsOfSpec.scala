@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Stream-static as-of enrichment: stateless (append mode, no
   * watermark, no state store) and exactly equal to the batch planned
   * as-of over the same rows.
   */
-class StreamStaticAsOfSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamStaticAsOfSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("streaming clicks enriched as-of a static view table == batch") {
@@ -21,7 +21,7 @@ class StreamStaticAsOfSpec extends AnyFunSuite with StopStreamsAfterAll {
       .select(col("user_id"), col("us").as("vt"),
         round(col("value") * 1000).cast("long").as("vv"))
 
-    val dir = Files.createTempDirectory("ssasof-src").toString
+    val dir = tempDir("ssasof-src")
     (0 until 3).foreach { i =>
       clicks.filter(pmod(col("event_id"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(dir)
@@ -34,7 +34,7 @@ class StreamStaticAsOfSpec extends AnyFunSuite with StopStreamsAfterAll {
       .writeStream.outputMode("append")
       .format("memory").queryName("ssasof_out")
       .option("checkpointLocation",
-        Files.createTempDirectory("ssasof-ckpt").toString)
+        tempDir("ssasof-ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
 

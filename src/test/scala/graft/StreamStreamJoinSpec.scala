@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Stream-stream inner join with watermarks + event-time range
   * condition (the Structured Streaming capability SURVEY §2.3 lists as
@@ -11,11 +10,12 @@ import java.nio.file.Files
   * the same user within 10 minutes; result must equal the batch
   * interval join.
   */
-class StreamStreamJoinSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamStreamJoinSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("purchase -> follow-up events join equals batch answer") {
-    val dir = Files.createTempDirectory("ssj").toString
+    val dir = tempDir("ssj")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         Tables.eventsTsMicros.as("ts"))
@@ -62,7 +62,7 @@ class StreamStreamJoinSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("LEFT OUTER stream-stream join emits null-padded rows for " +
     "unmatched purchases once the watermark passes") {
-    val dir = Files.createTempDirectory("ssjo").toString
+    val dir = tempDir("ssjo")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         Tables.eventsTsMicros.as("ts"))
@@ -127,7 +127,7 @@ class StreamStreamJoinSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("FULL OUTER stream-stream join emits null-padded rows on BOTH " +
     "sides once the watermark passes") {
-    val dir = Files.createTempDirectory("ssjf").toString
+    val dir = tempDir("ssjf")
     val ev = Tables.t(spark, TestSpark.sfDir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         Tables.eventsTsMicros.as("ts"))

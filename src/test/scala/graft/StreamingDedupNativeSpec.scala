@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Native `dropDuplicatesWithinWatermark` (the Spark 3.5+ streaming
   * dedup API): a replayed copy of the whole stream arriving within the
@@ -14,7 +13,8 @@ import java.nio.file.Files
   * at-least-once redelivery contract, reference YqlWriter.java
   * retry-replay semantics, handled natively).
   */
-class StreamingDedupNativeSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingDedupNativeSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("a replayed copy of the stream is fully suppressed across a " +
@@ -22,9 +22,9 @@ class StreamingDedupNativeSpec extends AnyFunSuite with StopStreamsAfterAll {
     val src = Tables.t(spark, TestSpark.sfDir, "events")
       .select(col("user_id"), col("event_id"),
         Tables.eventsTsMicros.as("ts"))
-    val dir = Files.createTempDirectory("ddw-src").toString
-    val ckpt = Files.createTempDirectory("ddw-ckpt").toString
-    val outDir = Files.createTempDirectory("ddw-out").toString
+    val dir = tempDir("ddw-src")
+    val ckpt = tempDir("ddw-ckpt")
+    val outDir = tempDir("ddw-out")
     def runOnce(): Unit = {
       val stream = spark.readStream
         .schema(spark.read.parquet(dir).schema)

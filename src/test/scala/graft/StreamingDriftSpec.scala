@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (reference window scores ~0 against itself; a shifted synthetic
   * window scores high).
   */
-class StreamingDriftSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingDriftSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   private lazy val ev = Tables.t(spark, TestSpark.sfDir, "events")
@@ -28,8 +29,7 @@ class StreamingDriftSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("streaming windowed bin counts == batch replay, and PSI of " +
       "the corpus against itself is ~0") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift")
     ev.write.mode("overwrite").parquet(dir)
     val stream = StreamingDrift.windowedBinCounts(
       spark.readStream.schema(ev.schema)
@@ -73,10 +73,9 @@ class StreamingDriftSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("windowed bin counts survive a checkpointed restart without " +
       "duplicate or lost emissions") {
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-drift-src").toString
-    val ckpt = Files.createTempDirectory("graft-drift-ck").toString
-    val out = Files.createTempDirectory("graft-drift-out").toString
+    val src = tempDir("graft-drift-src")
+    val ckpt = tempDir("graft-drift-ck")
+    val out = tempDir("graft-drift-out")
     // phase 1: first half of the corpus
     val half = ev.count() / 2
     val e1 = ev.limit(half.toInt)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Late-data observability: rows arriving behind the watermark must be
   * (a) DROPPED from the aggregate — results equal the batch aggregate
@@ -12,7 +11,8 @@ import java.nio.file.Files
   * production pipeline alerts on. This pins the operational contract
   * the dashboards rely on, not just result correctness.
   */
-class StreamingLateDataSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingLateDataSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("late rows are dropped from the windowed aggregate and " +
@@ -22,7 +22,7 @@ class StreamingLateDataSpec extends AnyFunSuite with StopStreamsAfterAll {
         round(col("value") * 1000).cast("long").as("vm"),
         expr("datediff(timestamp_micros(ts div 1000), date'2024-01-01')")
           .as("day"))
-    val dir = Files.createTempDirectory("late-src").toString
+    val dir = tempDir("late-src")
     // batch 1: days >= 2 (advances the watermark to ~max(ts) - 10m);
     // batch 2: days < 2 — entirely behind the watermark => dropped
     val onTime = src.filter(col("day") >= 2).drop("day")
@@ -37,8 +37,8 @@ class StreamingLateDataSpec extends AnyFunSuite with StopStreamsAfterAll {
     // two phases on ONE checkpoint so the late batch is guaranteed to
     // arrive after the watermark advanced (file mtime order is not
     // reliable within a single AvailableNow run)
-    val ckpt = Files.createTempDirectory("late-ckpt").toString
-    val outDir = Files.createTempDirectory("late-out").toString
+    val ckpt = tempDir("late-ckpt")
+    val outDir = tempDir("late-out")
     def runOnce(phase: Int): Long = {
       val stream = spark.readStream
         .schema(spark.read.parquet(dir).schema)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Streaming OHLC: the q49 bar aggregate run as an update-mode
   * streaming query over the same rows in three micro-batches — final
@@ -11,7 +10,8 @@ import java.nio.file.Files
   * min/max are all mergeable declarative aggregates, so incremental
   * state composes exactly).
   */
-class StreamingOhlcSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingOhlcSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("streaming update-mode bars converge to the batch OHLC") {
@@ -24,7 +24,7 @@ class StreamingOhlcSpec extends AnyFunSuite with StopStreamsAfterAll {
               * 86400000000L) * 67108864L + event_id""").as("ord"),
         round(col("value") * 1000).cast("long").as("vm"))
       .filter(col("day") < 6)
-    val dir = Files.createTempDirectory("ohlc-src").toString
+    val dir = tempDir("ohlc-src")
     // 3 deterministic chunks -> 3 micro-batches
     (0 until 3).foreach { i =>
       src.filter(pmod(col("ord"), lit(3)) === i)
@@ -44,7 +44,7 @@ class StreamingOhlcSpec extends AnyFunSuite with StopStreamsAfterAll {
       .writeStream.outputMode("update")
       .format("memory").queryName("ohlc_out")
       .option("checkpointLocation",
-        Files.createTempDirectory("ohlc-ckpt").toString)
+        tempDir("ohlc-ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     // last emission per bar (update mode re-emits changed bars; the

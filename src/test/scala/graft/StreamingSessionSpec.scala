@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Streaming session windows: `session_window` + watermark in APPEND
   * mode must finalize exactly the sessions the batch computation
@@ -17,7 +16,8 @@ import java.nio.file.Files
   * streaming session support), complementing the batch
   * gaps-and-islands replica in `ev_window_session`.
   */
-class StreamingSessionSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingSessionSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("append-mode streaming session windows converge to the batch " +
@@ -26,7 +26,7 @@ class StreamingSessionSpec extends AnyFunSuite with StopStreamsAfterAll {
       .select(col("user_id"), Tables.eventsTsMicros.as("ts"),
         round(col("value") * 1000).cast("long").as("vm"))
     val maxTs = src.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-    val dir = Files.createTempDirectory("sess-src").toString
+    val dir = tempDir("sess-src")
     src.coalesce(1).write.mode("append").parquet(dir)
 
     def sessions(df: org.apache.spark.sql.DataFrame) = df
@@ -36,8 +36,8 @@ class StreamingSessionSpec extends AnyFunSuite with StopStreamsAfterAll {
       .select(col("user_id"), col("w.start").as("s"),
         col("w.end").as("e"), col("n"), col("sum_vm"))
 
-    val ckpt = Files.createTempDirectory("sess-ckpt").toString
-    val outDir = Files.createTempDirectory("sess-out").toString
+    val ckpt = tempDir("sess-ckpt")
+    val outDir = tempDir("sess-out")
     def runOnce(): Unit = {
       val stream = spark.readStream
         .schema(spark.read.parquet(dir).schema)

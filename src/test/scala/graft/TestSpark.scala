@@ -14,8 +14,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", TempDirs.forJvm("graft-wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -15,7 +15,8 @@ import java.nio.file.Files
   * maxOffsetsPerTrigger bounding each micro-batch (the reference
   * reader's admission cap, CdcReader.java:43).
   */
-class TopicSourceSpec extends AnyFunSuite with StopStreamsAfterAll {
+class TopicSourceSpec extends AnyFunSuite
+    with StopStreamsAfterAll with TempDirs {
   lazy val spark = TestSpark.spark
 
   val schema = CdcParse.CdcSchema(
@@ -26,7 +27,7 @@ class TopicSourceSpec extends AnyFunSuite with StopStreamsAfterAll {
     pk = Seq("user_id"))
 
   def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag")
 
   def sinkRows(sink: KeyedTableSink): Set[(Long, String, Option[Long])] =
     sink.load().collect().map(r => (r.getLong(0), r.getString(1),

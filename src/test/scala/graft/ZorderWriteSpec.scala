@@ -3,7 +3,6 @@ package graft
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** End-to-end proof of the z-order layout claim (layout_zorder is the
   * deterministic audit; this writes REAL parquet files and measures
@@ -13,7 +12,7 @@ import java.nio.file.Files
   * dimension spanning its whole range in every file — so only the
   * z-layout lets min/max stats prune scans filtered on either column.
   */
-class ZorderWriteSpec extends AnyFunSuite {
+class ZorderWriteSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def perFileSpans(path: String, dim: String): Seq[Long] =
@@ -38,7 +37,7 @@ class ZorderWriteSpec extends AnyFunSuite {
     // high bits dominate the code and the narrow dim degenerates —
     // rank-normalizing both to the same 0..255 scale is the standard
     // fix (measured: raw interleave left cust spanning 99% per file)
-    val zDir = Files.createTempDirectory("zorder").toString + "/t"
+    val zDir = tempDir("zorder") + "/t"
     orders
       .withColumn("cust_r",
         (percent_rank().over(org.apache.spark.sql.expressions.Window
@@ -52,7 +51,7 @@ class ZorderWriteSpec extends AnyFunSuite {
       .sortWithinPartitions("z")
       .write.parquet(zDir)
 
-    val sortDir = Files.createTempDirectory("custsort").toString + "/t"
+    val sortDir = tempDir("custsort") + "/t"
     orders
       .repartitionByRange(8, col("o_custkey"))
       .sortWithinPartitions("o_custkey")
@@ -89,7 +88,7 @@ class ZorderWriteSpec extends AnyFunSuite {
       (max("o_custkey") - min("o_custkey")).cast("long"),
       (max("day") - min("day")).cast("long")).head()
     val (custSpan, daySpan) = (g.getLong(0), g.getLong(1))
-    val hDir = Files.createTempDirectory("hilbert").toString + "/t"
+    val hDir = tempDir("hilbert") + "/t"
     orders
       .withColumn("cust_r",
         (percent_rank().over(org.apache.spark.sql.expressions.Window
